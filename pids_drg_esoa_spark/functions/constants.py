@@ -46,20 +46,6 @@ SALT_CATIONS: frozenset[str] = frozenset(
 SALT_TAIL_BREAK: frozenset[str] = frozenset({"&", "+", "/", "and", "with"})
 
 
-def _build_salt_token_words() -> frozenset[str]:
-    """Reference SALT_TOKEN_WORDS (text_utils.py:182-195): every salt
-    token lowercased PLUS each word of its normalize_text form PLUS
-    the literal 'salt'/'salts' markers."""
-    from .text import normalize_text_py
-
-    words: set[str] = {"salt", "salts"}
-    for tok in SALT_TOKENS:
-        if not tok:
-            continue
-        words.add(tok.lower())
-        words.update(normalize_text_py(tok).split())
-    return frozenset(words)
-
 # Dosage-form canonicalization: the FULL reference FORM_CANON
 # (lowercased), plus repo aliases the reference resolves elsewhere.
 FORM_CANON: dict[str, str] = dict(FORM_CANON_FULL)

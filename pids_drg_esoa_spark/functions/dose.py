@@ -217,23 +217,6 @@ def ratio_mg_per_ml(strength_mg: Column, per_val: Column) -> Column:
     ).otherwise(strength_mg / per_val)
 
 
-def safe_ratio_mg_per_ml_py(strength, unit, per_val) -> float | None:
-    """Python twin of the reference's safe_ratio_mg_per_ml
-    (dose.py:129-135): to_mg on (strength, unit), comma-tolerant float
-    on per_val, None on null/zero denominators."""
-    mg = to_mg_py(strength, unit)
-    try:
-        if per_val is None:
-            pv = None
-        else:
-            pv = float(str(per_val).replace(",", ".").strip()) if isinstance(per_val, str) else float(per_val)
-    except (TypeError, ValueError):
-        pv = None
-    if mg is None or pv in (None, 0):
-        return None
-    return mg / pv
-
-
 def _isclose(a: float, b: float) -> bool:
     return math.isclose(a, b, rel_tol=1e-12, abs_tol=1e-9)
 

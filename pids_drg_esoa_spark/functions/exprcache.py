@@ -1,34 +1,52 @@
-"""Per-SparkContext memoization for expensive DRIVER-side plan
-artifacts that are pure functions of static vocabulary constants:
+"""One per-application registry for the session state that makes
+repeat ``tag_descriptions`` calls cheap.
 
-- ``cached_column``: big Column expression trees (the native vocab
-  twins build ~450-literal InSets and dozens of regexp stages — each
-  literal is a py4j round trip, measured 0.6 s per rebuild of the
-  combination normalizer at steady state). The unresolved Column is
-  reusable across DataFrames within one JVM, so one build per
-  SparkContext serves every tag() call.
-- ``cached_broadcast``: driver→executor broadcasts of collected dim
-  dicts. Every tag() call re-collects its dims and re-broadcasts the
-  same content (the worker-side trie cache already fingerprints
-  content for this reason — r10); keying the broadcast itself on a
-  content fingerprint skips the per-call pickle + broadcast job and
-  lets the worker caches hit their cheap id() tier.
+Contract:
 
-Keys include ``sc.applicationId`` so a stopped-and-recreated session
-never serves stale py4j object handles. Fingerprints hash the FULL
-content (not a sample): dim dicts are broadcast-sized by contract, so
-hashing them is microseconds against the pickle they replace.
+- Lifetime: the registry belongs to one Spark application. The first
+  lookup after ``sc.applicationId`` changes drops every entry, so a
+  stopped-and-recreated session never sees stale py4j handles.
+- Size: one ordered store keyed on ``(name, key)``, capped at
+  ``_MAX_ENTRIES`` and evicted least-recently-used (a hit refreshes
+  its entry). An evicted entry only drops the registry's reference;
+  whoever still holds the object keeps a working object.
+- Purity: an entry must be a pure function of its key. ``cached_value``
+  is the one memo entry point. It serves Column trees (a vocab twin
+  embeds hundreds of literals, ~0.6 s of py4j round trips per
+  rebuild), the tagger's UDF objects (keyed on their broadcasts'
+  ``Broadcast.id``, so a repeat plan pickles identically and the
+  CacheManager dedups it), constant DataFrames, and broadcasts keyed
+  by their frozen content (``cached_broadcast``).
+- Checkpoints: ``cached_checkpoint`` keys a ``localCheckpoint`` leaf on
+  the canonicalized analyzed plan, the equality ``sameResult`` uses.
+  This is persist()-style plan dedup within one session, not a result
+  cache across runs. The leaves are owned by the session: never pass
+  them to ``operators.curation.release_checkpoints``.
+- Background count: a lazily registered checkpoint starts one daemon
+  count job that materializes the leaf; ``checkpoint_count`` returns
+  its result, so the caller needs no second count job.
+
+All operations are thread-safe; builds run outside the lock, and when
+two threads build the same key the first stored value wins.
 """
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
 from collections.abc import Callable
+from concurrent.futures import Future
 from typing import Any
 
 from pyspark import SparkContext
 
-_COLUMNS: dict[tuple, Any] = {}
-_BROADCASTS: dict[tuple, Any] = {}
+# enough for every dim, Column tree, UDF and broadcast one runner or
+# tagger session resolves; bounds fuzz loops over many distinct dims
+_MAX_ENTRIES = 64
+
+_STORE: OrderedDict[tuple, Any] = OrderedDict()
+_LOCK = threading.Lock()
+_store_app: str | None = None
 
 
 def _app_id() -> str:
@@ -36,14 +54,31 @@ def _app_id() -> str:
     return sc.applicationId if sc is not None else "<none>"
 
 
-def cached_column(name: str, col_name: str, build: Callable[[], Any]):
-    """Return the memoized Column for (builder name, input column
-    name), building it once per SparkContext."""
-    key = (_app_id(), name, col_name)
-    col = _COLUMNS.get(key)
-    if col is None:
-        col = _COLUMNS[key] = build()
-    return col
+def _sync(app: str) -> None:
+    """Drop the whole store when the application changed (lock held)."""
+    global _store_app
+    if app != _store_app:
+        _STORE.clear()
+        _store_app = app
+
+
+def cached_value(name: str, key: Any, build: Callable[[], Any]):
+    """Return the registry entry for ``(name, key)``, building it once
+    per application. ``build`` must be a pure function of the key."""
+    app, k = _app_id(), (name, key)
+    with _LOCK:
+        _sync(app)
+        if k in _STORE:
+            _STORE.move_to_end(k)
+            return _STORE[k]
+    value = build()
+    with _LOCK:
+        _sync(app)
+        value = _STORE.setdefault(k, value)
+        _STORE.move_to_end(k)
+        while len(_STORE) > _MAX_ENTRIES:
+            _STORE.popitem(last=False)
+    return value
 
 
 def _freeze(value: Any) -> Any:
@@ -56,77 +91,60 @@ def _freeze(value: Any) -> Any:
     return value
 
 
-_VALUES: dict[tuple, Any] = {}
+def cached_broadcast(sc: SparkContext, name: str, value: Any):
+    """Broadcast ``value`` once per (application, content): the frozen
+    content is the key, so a hit is exact equality, never hash-only."""
+    return cached_value(name, _freeze(value), lambda: sc.broadcast(value))
 
 
-def cached_value(name: str, key: tuple, build: Callable[[], Any]):
-    """Generic per-SparkContext memo for driver-side plan artifacts
-    (UDF objects, prepared relations) keyed on (builder name, caller
-    key). Same contract as cached_column: the artifact must be a pure
-    function of its key. Primary use: the tagger's per-call
-    pandas-UDF wrappers — a FRESH UDF object per tag() call pickles
-    into a distinct PythonUDF plan node, so the CacheManager saw
-    every call's persisted tier relations as new plans and
-    re-computed them; keying the UDF object on its broadcast inputs
-    (stable via cached_broadcast) makes repeat plans CacheManager-
-    equal, the same session-scoped dedup every other operator already
-    gets from persist()."""
-    k = (_app_id(), name, key)
-    v = _VALUES.get(k)
-    if v is None:
-        v = _VALUES[k] = build()
-    return v
+class _Checkpoint:
+    """A registered ``localCheckpoint`` leaf; ``count`` is the lazy
+    registration's background count (None for an eager one)."""
 
+    def __init__(self, df, eager: bool):
+        self.leaf = df.localCheckpoint(eager=eager)
+        self.count: Future | None = None
+        if not eager:
+            self.count = Future()
+            threading.Thread(target=self._count, daemon=True).start()
 
-_CHECKPOINTS: dict[str, list[tuple[Any, Any]]] = {}
-# FIFO cap: evicted entries drop their strong ref so the checkpointed
-# RDD becomes GC-reapable again (today's no-registry behavior). Bounds
-# registry growth for callers that loop over many DISTINCT synthetic
-# dims (fuzz harnesses) while comfortably holding every dim a real
-# runner/tagger session resolves.
-_CHECKPOINTS_MAX = 64
+    def _count(self) -> None:
+        try:
+            self.count.set_result(self.leaf.count())
+        except Exception as exc:  # surfaced by checkpoint_count
+            self.count.set_exception(exc)
+
+    def wait(self) -> int:
+        try:
+            return self.count.result()
+        except Exception:
+            return self.leaf.count()  # re-raises, or recovers a transient failure
 
 
 def cached_checkpoint(df, eager: bool = True):
-    """Content-keyed eager ``localCheckpoint`` memo per SparkContext:
-    a DataFrame whose ANALYZED plan is semantically equal to one
-    already checkpointed this session (``plan.sameResult`` — the same
-    equality the CacheManager uses to dedup persisted relations)
-    returns the EXISTING checkpointed leaf instead of re-running the
-    materialization job. This is plan-construction dedup with persist()
-    semantics, NOT cross-run result caching: the registry is keyed on
-    applicationId and dies with the process, exactly like a persisted
-    relation (and like persist, a caller that mutates files underneath
-    a semantically-equal plan mid-session reads the materialized
-    snapshot — Spark's standard cached-relation behavior).
-
-    Why: tag_descriptions re-materialized every dim on EVERY call
-    (eager checkpoint job + plan analysis each time, ~1.5-2 s of the
-    ~5 s warm build), and repeated headline invocations accumulated a
-    fresh never-released checkpoint per call (r13 ADVICE #1); the
-    registry resolves a semantically-equal dim to ONE leaf per
-    session."""
-    sc = df.sparkSession.sparkContext
-    plan = df._jdf.queryExecution().analyzed()
-    entries = _CHECKPOINTS.setdefault(sc.applicationId, [])
-    for stored_plan, stored_df in list(entries):
-        if plan.sameResult(stored_plan):
-            return stored_df
-    out = df.localCheckpoint(eager=eager)
-    entries.append((plan, out))
-    del entries[:-_CHECKPOINTS_MAX]
-    return out
+    """``df.localCheckpoint(eager)``, memoized per application on the
+    canonicalized analyzed plan: a semantically equal DataFrame gets
+    the existing leaf instead of a new materialization job. A hit
+    re-applies the caller's column names when they differ (canonical
+    plans ignore aliases), and ``eager=True`` waits for a lazily
+    registered leaf to materialize."""
+    plan = df._jdf.queryExecution().analyzed().canonicalized()
+    entry = cached_value("checkpoint", plan, lambda: _Checkpoint(df, eager))
+    if eager and entry.count is not None:
+        entry.wait()
+    if entry.leaf.columns != df.columns:
+        return entry.leaf.toDF(*df.columns)
+    return entry.leaf
 
 
-def cached_broadcast(sc: SparkContext, name: str, value: Any):
-    """Broadcast ``value`` once per (SparkContext, content): repeat
-    calls with equal content return the SAME Broadcast object."""
-    # the FROZEN CONTENT is the key (not its hash): dict lookup
-    # resolves hash collisions through __eq__, so a hit is exact
-    # equality by construction; the retained frozen copy is
-    # broadcast-sized by the same contract as the value itself
-    key = (sc.applicationId, name, _freeze(value))
-    b = _BROADCASTS.get(key)
-    if b is None:
-        b = _BROADCASTS[key] = sc.broadcast(value)
-    return b
+def checkpoint_count(df) -> int:
+    """Row count of a leaf returned by ``cached_checkpoint``: the
+    background count of a lazily registered leaf, else a count job."""
+    with _LOCK:
+        entry = next(
+            (v for v in _STORE.values() if isinstance(v, _Checkpoint) and v.leaf is df),
+            None,
+        )
+    if entry is None or entry.count is None:
+        return df.count()
+    return entry.wait()

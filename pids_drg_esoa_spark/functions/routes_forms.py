@@ -104,18 +104,6 @@ def parse_route_py(text: str | None) -> tuple[str | None, str]:
     return None, "none"
 
 
-def normalize_form_py(form: str | None) -> str | None:
-    if not form:
-        return None
-    return FORM_CANON.get(form.strip().lower(), form.strip().lower())
-
-
-def normalize_route_py(route: str | None) -> str | None:
-    if not route:
-        return None
-    return ROUTE_CANON.get(route.strip().lower(), route.strip().lower())
-
-
 def forms_are_equivalent_py(a: str | None, b: str | None) -> bool:
     """F27: VERBATIM twin of scoring.py:73-86 — the version scoring
     actually calls (its local def shadows the unified_constants
@@ -138,11 +126,6 @@ def forms_are_equivalent_py(a: str | None, b: str | None) -> bool:
     from .part4_tables import FORM_EQUIVALENTS_P4
 
     return f2 in FORM_EQUIVALENTS_P4.get(f1, frozenset())
-
-
-def routes_match_py(a: str | None, b: str | None) -> bool:
-    ra, rb = normalize_route_py(a), normalize_route_py(b)
-    return ra is not None and ra == rb
 
 
 # ---------------------------------------------------------------------------

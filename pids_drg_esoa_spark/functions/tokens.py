@@ -521,9 +521,9 @@ def normalize_generic_combination_native(col):
     from pyspark.sql import functions as F
 
     if isinstance(col, str):
-        from .exprcache import cached_column
+        from .exprcache import cached_value
 
-        return cached_column(
+        return cached_value(
             "combo_native", col, lambda: _combo_native_build(F.col(col))
         )
     return _combo_native_build(col)
@@ -724,21 +724,16 @@ class SubstringMatcher:
 
 
 # Prep cache for multiword-generics sets: (len-desc sorted tuple,
-# SubstringMatcher). Two tiers:
-# - object IDENTITY (the broadcast value is one object per worker
-#   process, so repeat tasks of one tagger call hit without hashing);
-# - content fingerprint (len, hash) + full equality verify — each
-#   tagger CALL broadcasts a fresh object, but long-lived Python
-#   workers serve MANY calls (bench loops, test suites, per-trigger
-#   streaming), and rebuilding an 8K-pattern trie per call per worker
-#   measured ~19 CPU-s per tag() at sf0.1. frozenset caches its hash,
-#   so the fingerprint probe is O(N) once per new object, then O(1).
-# Strong references to the keyed objects are held, so id() cannot be
-# reused while cached. Content keying also makes the equal-length tie
-# order of the sort a function of CONTENT, not of which equal set
-# object arrived first.
-_MW_PREP_CACHE: dict[int, tuple] = {}
-_MW_FP_CACHE: dict[tuple, tuple] = {}
+# SubstringMatcher), keyed on a content fingerprint (len, hash) with a
+# full equality verify; the entry holds the last object seen, so the
+# repeat rows of one call pass on identity and skip the O(N) compare.
+# Long-lived Python workers serve MANY tagger calls (bench loops, test
+# suites, per-trigger streaming), and rebuilding an 8K-pattern trie
+# per call per worker measured ~19 CPU-s per tag() at sf0.1.
+# frozenset caches its hash, so the probe is O(1) per row. Content
+# keying also makes the equal-length tie order of the sort a function
+# of CONTENT, not of which equal set object arrived first.
+_MW_PREP_CACHE: dict[tuple, tuple] = {}
 _MW_PREP_MAX = 8
 # below this many patterns the trie build costs more than the plain
 # scans it saves
@@ -746,30 +741,26 @@ _MW_MATCHER_MIN_PATTERNS = 64
 
 
 def multiword_prep(multiword) -> tuple[tuple[str, ...], "SubstringMatcher | None"]:
-    key = id(multiword)
+    try:
+        key = (len(multiword), hash(multiword))
+    except TypeError:  # unhashable input: build uncached
+        key = None
     hit = _MW_PREP_CACHE.get(key)
     if hit is not None and hit[0] is multiword:
         return hit[1], hit[2]
-    try:
-        fp = (len(multiword), hash(multiword))
-    except TypeError:
-        fp = None
-    if fp is not None:
-        fhit = _MW_FP_CACHE.get(fp)
-        if fhit is not None and fhit[0] == multiword:
-            _MW_PREP_CACHE[key] = (multiword, fhit[1], fhit[2])
-            return fhit[1], fhit[2]
+    if hit is not None and hit[0] == multiword:
+        # an equal new object: re-point the entry so its later rows
+        # take the identity path
+        _MW_PREP_CACHE[key] = (multiword, hit[1], hit[2])
+        return hit[1], hit[2]
     ordered = tuple(sorted(multiword, key=len, reverse=True))
     matcher = (
         SubstringMatcher(ordered) if len(ordered) >= _MW_MATCHER_MIN_PATTERNS else None
     )
-    if len(_MW_PREP_CACHE) >= _MW_PREP_MAX:
-        _MW_PREP_CACHE.clear()
-    if len(_MW_FP_CACHE) >= _MW_PREP_MAX:
-        _MW_FP_CACHE.clear()
-    _MW_PREP_CACHE[key] = (multiword, ordered, matcher)
-    if fp is not None:
-        _MW_FP_CACHE[fp] = (multiword, ordered, matcher)
+    if key is not None:
+        if len(_MW_PREP_CACHE) >= _MW_PREP_MAX:
+            _MW_PREP_CACHE.clear()
+        _MW_PREP_CACHE[key] = (multiword, ordered, matcher)
     return ordered, matcher
 
 

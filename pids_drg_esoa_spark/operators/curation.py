@@ -738,8 +738,7 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-shape layers (exact-group collapse + star sparsification)."""
     d = table(spark, sf_dir, "documents")
     n_docs = d.count()  # bare parquet scan — metadata-only
-    out, persisted = cluster_assign_docs(d, "text", "doc_id", n_docs)
-    out.persisted_intermediates = persisted
+    out, _ = cluster_assign_docs(d, "text", "doc_id", n_docs)
     return out
 
 
@@ -899,8 +898,7 @@ def dedup_cluster_trailing_planted(spark: SparkSession, sf_dir: str) -> DataFram
         F.concat("text", F.lit(" trailtag"), F.col("c").cast("string")).alias("text"),
     )
     n_docs = d.count() * 3
-    out, persisted = cluster_assign_docs(planted, "text", "doc_id", n_docs)
-    out.persisted_intermediates = persisted
+    out, _ = cluster_assign_docs(planted, "text", "doc_id", n_docs)
     return out
 
 
@@ -1213,10 +1211,8 @@ def embedding_cluster_assign_sparse(spark: SparkSession, sf_dir: str) -> DataFra
     from .similarity import _near_dup_planted
 
     e = _near_dup_planted(spark, sf_dir)
-    labels, caches = embedding_components_sparse(e)
-    out = assign_clusters(e, "vec_id", labels)
-    out.persisted_intermediates = caches
-    return out
+    labels, _ = embedding_components_sparse(e)
+    return assign_clusters(e, "vec_id", labels)
 
 
 @register(

@@ -501,11 +501,7 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare). Signature is one agg pass; banding makes candidate
     generation a (band,key) equi-self-join — the shape that survives
     100 TB (Broder minhashing + banding as in MMDS ch.3)."""
-    verified, caches = minhash_verified_pairs(table(spark, sf_dir, "documents"))
-    # tagger-convention exposure: batch sessions may leave these
-    # cached (the CacheManager dedups equal plans, so repeat calls
-    # reuse ONE entry per corpus); per-trigger callers unpersist
-    verified.persisted_intermediates = caches
+    verified, _ = minhash_verified_pairs(table(spark, sf_dir, "documents"))
     return verified
 
 
@@ -547,8 +543,7 @@ def dedup_minhash_planted_cluster(spark: SparkSession, sf_dir: str) -> DataFrame
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    verified, caches = minhash_verified_pairs(d)
-    verified.persisted_intermediates = caches
+    verified, _ = minhash_verified_pairs(d)
     return verified
 
 

@@ -34,8 +34,6 @@ shuffles; the only wide op is the per-doc candidate window, whose key
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -43,7 +41,7 @@ from pyspark.sql import functions as F
 import pandas as pd
 from pyspark.sql import types as T
 
-from ..functions.exprcache import cached_checkpoint, cached_value
+from ..functions.exprcache import cached_checkpoint, cached_value, checkpoint_count
 from ..functions.fuzzy import fuzz_ratio, length_band_filter
 from ..functions.routes_forms import parse_form_col
 from ..functions.text import normalize_text
@@ -378,12 +376,8 @@ def _pin_parallelism(df: DataFrame, *cols: str) -> DataFrame:
 
 def _components(esoa: DataFrame, text_col: str, brand_b, mw_b, syn_b) -> DataFrame:
     """Stages 1-2: dedupe texts, extract combination components."""
-    # r14: memoized per broadcast inputs (exprcache.cached_value) — a
-    # fresh UDF object per call pickles into a DISTINCT PythonUDF plan
-    # node, defeating both the checkpoint registry's sameResult and
-    # the CacheManager's plan-equality dedup of the persisted tiers.
     doc_enrich = cached_value(
-        "tagger_doc_enrich", (id(brand_b), id(mw_b), id(syn_b)),
+        "tagger_doc_enrich", _broadcast_key(brand_b, mw_b, syn_b),
         lambda: _make_doc_enrich(brand_b, mw_b, syn_b),
     )
     # Explicit repartition after the dedupe shuffle (_pin_parallelism):
@@ -473,13 +467,13 @@ def _components(esoa: DataFrame, text_col: str, brand_b, mw_b, syn_b) -> DataFra
     # LAZY checkpoint + background materialization (r11): eager=False
     # already truncates the logical plan to a LogicalRDD leaf (no
     # children — verified), so downstream plan construction can start
-    # immediately while a daemon thread runs the enrich job. The
-    # BlockManager's per-partition compute-or-wait locking makes the
-    # race benign: whoever touches a partition first computes it, the
-    # other waits — keys.count() (the next blocking action) then pays
-    # only the not-yet-finished remainder instead of the full ~1.6 s
-    # enrich wall. Thread failures are swallowed: the partitions are
-    # recomputed (or the error re-raised) by the next real action.
+    # immediately while the registry's background count (exprcache)
+    # runs the enrich job. The BlockManager's per-partition
+    # compute-or-wait locking makes the race benign: whoever touches a
+    # partition first computes it, the other waits — keys.count() (the
+    # next blocking action) then pays only the not-yet-finished
+    # remainder instead of the full ~1.6 s enrich wall. A failed count
+    # resurfaces in checkpoint_count.
     # r14: through the content-keyed registry (exprcache). When the
     # SAME corpus is re-tagged in one session (bench warm runs, batch
     # re-invocations), the pre-checkpoint plan is semantically stable —
@@ -490,51 +484,32 @@ def _components(esoa: DataFrame, text_col: str, brand_b, mw_b, syn_b) -> DataFra
     # enrich job. Same session-scoped plan-equality semantics as the
     # persisted intermediates the CacheManager already dedups (r10-13
     # convention); a cold/first call computes everything from parquet.
-    docs = cached_checkpoint(docs, eager=False)
-
-    # r13: the daemon's count IS the doc count the token-tier gate
-    # needs later (tagger.py ~1341) — publish it through a one-slot
-    # future on the DataFrame object so the gate can join() this
-    # thread instead of paying a second count job mid-build.
-    # r14: a registry hit carries the future from its first build —
-    # the thread has joined and the slot holds the count; don't spawn
-    # a duplicate count job on the shared object.
-    if getattr(docs, "_tag_count_future", None) is None:
-        count_slot: dict[str, int] = {}
-
-        def _materialize() -> None:
-            try:
-                count_slot["n"] = docs.count()
-            except Exception:
-                pass  # surfaced by the next action on `docs`
-
-        t = threading.Thread(target=_materialize, daemon=True)
-        t.start()
-        docs._tag_count_future = (t, count_slot)  # type: ignore[attr-defined]
-    return docs
+    return cached_checkpoint(docs, eager=False)
 
 
-# Persisted intermediates created while building the CURRENT
-# tag_descriptions plan. A long-lived batch session can leave them
-# cached (they back the returned plan), but per-trigger callers
-# (streaming/incremental.stream_tag_esoa_parts) must release them
-# after each micro-batch or the CacheManager accumulates 3 relations
-# per arriving part. tag_descriptions exposes the list as
-# ``tagged.persisted_intermediates``.
-_ACTIVE_PERSISTS: list[DataFrame] | None = None
+def _broadcast_key(*broadcasts) -> tuple:
+    """Registry key for an artifact built from these (content-keyed)
+    broadcasts: their Spark ids, unique within the application where a
+    Python id() is reused once its object is collected. Memoizing the
+    tagger's UDF objects on it matters (r14): a fresh UDF object per
+    call pickles into a DISTINCT PythonUDF plan node, defeating both
+    the checkpoint registry and the CacheManager's plan-equality dedup
+    of the persisted tiers."""
+    return tuple(b._jbroadcast.id() for b in broadcasts)
 
 
-def _persist_tracked(df: DataFrame) -> DataFrame:
+def _persist(df: DataFrame, persisted: list[DataFrame]) -> DataFrame:
+    """Persist ``df`` and record it in the calling tag_descriptions'
+    own list (exposed as ``tagged.persisted_intermediates``)."""
     df = df.persist()
-    if _ACTIVE_PERSISTS is not None:
-        _ACTIVE_PERSISTS.append(df)
+    persisted.append(df)
     return df
 
 
 def _token_matches(
     keys: DataFrame, generics_dim: DataFrame, synonyms_dim: DataFrame | None,
     brands_dim: DataFrame | None, mixtures_dim: DataFrame | None = None,
-    n_pairs_hint: int | None = None,
+    n_pairs_hint: int | None = None, *, persisted: list[DataFrame],
 ) -> DataFrame:
     """Stage 3 for single tokens (the reference's single IN-list
     lookup + fallbacks, lookup.py:223-306): exact, synonym, singular
@@ -564,7 +539,7 @@ def _token_matches(
     # single generic and stole the win from the mixture).
     if "is_combo" not in keys.columns:
         keys = keys.withColumn("is_combo", F.lit(False))
-    keys = _persist_tracked(keys)  # probed by every tier
+    keys = _persist(keys, persisted)  # probed by every tier
     keys_tok = keys.filter(~F.col("is_combo"))
     # reference_text = the dim row's raw text (unified.reference_text)
     # — the W1 details probe targets it alongside the generic name
@@ -614,11 +589,9 @@ def _token_matches(
 
     # Singular retry (F29, lookup.py:52-94): plural first word →
     # singular, re-probe the generics dim.
-    from ..functions.exprcache import cached_column
-
     sing = keys.withColumn(
         "skey2",
-        cached_column("singular_key", "key", lambda: _singular_key(F.col("key"))),
+        cached_value("singular_key", "key", lambda: _singular_key(F.col("key"))),
     ).filter(F.col("skey2") != F.col("key"))
     tiers.append(tier(sing.join(g, sing.skey2 == F.col("gkey")), 0, PRIORITY_TOKEN, "singular"))
 
@@ -689,7 +662,7 @@ def _token_matches(
     if per_distinct:
         # _pin_parallelism: dkeys is small-bytes/high-CPU, exactly
         # what AQE would collapse to one partition.
-        probe = _persist_tracked(_pin_parallelism(keys.select("key").distinct(), "key"))
+        probe = _persist(_pin_parallelism(keys.select("key").distinct(), "key"), persisted)
         wkey = ["key"]
     else:
         probe = keys
@@ -750,7 +723,7 @@ def _token_matches(
     # plan-size copies it saves (cold 28.1 s vs 23.5 s, warm 15.6 vs
     # 14.7) — fb is a small relation behind broadcast anti-joins, so
     # the lesson-#3 collapse does not pay here
-    fb = _persist_tracked(fb)  # probed by all three fallback tiers
+    fb = _persist(fb, persisted)  # probed by all three fallback tiers
 
     def back(hits: DataFrame) -> DataFrame:
         # Scale note: this join-back carries NO broadcast hint on
@@ -886,8 +859,6 @@ def _materialize_dim(dim: DataFrame | None) -> DataFrame | None:
     # semantically-equal dim re-presented in the same session resolves
     # to the ONE existing leaf instead of paying a fresh checkpoint
     # job + analysis per tag() call (persist()-equivalent semantics).
-    from ..functions.exprcache import cached_checkpoint
-
     return cached_checkpoint(dim)
 
 
@@ -1137,27 +1108,20 @@ def tag_descriptions(
     join back on text (A6). Persisted intermediates built for this
     plan are exposed as ``result.persisted_intermediates`` so
     per-trigger callers can unpersist them after consuming the batch
-    (batch sessions may leave them cached - they back the plan).
-
-    try/finally discipline: the tracking global is ALWAYS restored
-    (a failing build would otherwise corrupt the next call's list —
-    and, per-trigger, leak 3 cached relations per retry), and a
-    failing build unpersists whatever it had already cached."""
-    global _ACTIVE_PERSISTS
-    prev_persists = _ACTIVE_PERSISTS
-    _ACTIVE_PERSISTS = _collected = []
+    (batch sessions may leave them cached - they back the plan). Each
+    call owns its list, so concurrent calls never mix them; a failing
+    build unpersists whatever it had already cached."""
+    persisted: list[DataFrame] = []
     try:
         tagged = _tag_descriptions_impl(
             esoa, generics_dim, atc_dim, synonyms_dim, brands_dim,
-            mixtures_dim, fda_food_dim, text_col,
+            mixtures_dim, fda_food_dim, text_col, persisted,
         )
     except BaseException:
-        for r in _collected:
+        for r in persisted:
             r.unpersist()
         raise
-    finally:
-        _ACTIVE_PERSISTS = prev_persists
-    tagged.persisted_intermediates = _collected
+    tagged.persisted_intermediates = persisted
     return tagged
 
 
@@ -1170,6 +1134,7 @@ def _tag_descriptions_impl(
     mixtures_dim: DataFrame | None,
     fda_food_dim: DataFrame | None,
     text_col: str,
+    persisted: list[DataFrame],
 ) -> DataFrame:
     spark = esoa.sparkSession
     sc = spark.sparkContext
@@ -1367,32 +1332,30 @@ def _tag_descriptions_impl(
     # strip, tagger.py:302-307 — e.g. a brand mapping to 'ISOSORBIDE
     # DINITRATE' must probe the multiword dim row unstripped). The
     # brands dim is broadcast-sized by contract and brand_map is
-    # already collected, so this costs nothing extra.
+    # already collected, so this costs nothing extra. Memoized like
+    # the seed: a fresh createDataFrame leaf per call made fb,
+    # token_hits and doc_inputs new plans, 3 more cached RDDs per call.
     brands_targets = None
     if brand_map:
         from ..functions.matching import _strip_component
 
-        brands_targets = spark.createDataFrame(
-            [
-                (b.lower(), _strip_component(g, {}, frozenset(multiword)).lower())
-                for b, g in sorted(brand_map.items())
-            ],
-            "bkey string, target_key string",
+        brands_targets = cached_value(
+            "tagger_brand_targets", _broadcast_key(brand_b, mw_b),
+            lambda: spark.createDataFrame(
+                [
+                    (b.lower(), _strip_component(g, {}, frozenset(multiword)).lower())
+                    for b, g in sorted(brand_map.items())
+                ],
+                "bkey string, target_key string",
+            ),
         )
     # gate hint: docs is a (lazily materializing) checkpoint leaf —
-    # reuse the daemon materializer's count (join its thread) instead
-    # of running a second count job mid-build; the fallback count
-    # covers a failed/absent daemon (its error resurfaces here).
-    _cf = getattr(docs, "_tag_count_future", None)
-    if _cf is not None:
-        _cf[0].join()
-        n_docs = _cf[1].get("n")
-    else:
-        n_docs = None
-    token_hits = _persist_tracked(_token_matches(
+    # reuse the registry's background count instead of running a
+    # second count job mid-build (a failed count resurfaces here).
+    token_hits = _persist(_token_matches(
         keys, generics_dim, synonyms_dim, brands_targets, mixtures_dim,
-        n_pairs_hint=2 * (n_docs if n_docs is not None else docs.count()),
-    ))
+        n_pairs_hint=2 * checkpoint_count(docs), persisted=persisted,
+    ), persisted)
 
     # No synthesized ' + '-joined candidates: the reference never
     # fabricates a combination name from individually-matched tokens —
@@ -1456,13 +1419,13 @@ def _tag_descriptions_impl(
         )
     )
     input_set_udf = cached_value(
-        "tagger_input_set", (id(syn_b),), lambda: _make_input_set(syn_b)
-    )  # r14: stable UDF object per broadcast — see _components' note
+        "tagger_input_set", _broadcast_key(syn_b), lambda: _make_input_set(syn_b)
+    )
     # input-shape flags (reference tagger.py:915-920), inlined into
     # ONE select below
     _HAS_PLUS = F.col("raw_text").contains("+")
     _HAS_IN = F.upper("raw_text").contains(" IN ") & (F.col("gm.num_input") > 1)
-    doc_inputs = _persist_tracked(
+    doc_inputs = _persist(
         docs.select("raw_text", "stripped", "combo_keys")
         .join(hit_pairs, "raw_text", "left")
         .withColumn(
@@ -1483,7 +1446,8 @@ def _tag_descriptions_impl(
             (_HAS_IN & ~_HAS_PLUS).alias("is_iv"),
             ((F.col("gm.num_input") > 1) & _HAS_PLUS).alias("is_combination"),
             (F.col("gm.num_input") == 1).alias("is_single"),
-        )
+        ),
+        persisted,
     )  # persisted: probed by the gate join and the W1 ranking join
     # non-deterministic mark (optimization guide §4.4): the v.matches
     # filter right below would otherwise be pushed under the
@@ -1492,9 +1456,9 @@ def _tag_descriptions_impl(
     # this call, every candidate paying generics_match twice. The
     # function is pure; the mark only stops the optimizer copying it.
     validate_udf = cached_value(
-        "tagger_validate", (id(syn_b),),
+        "tagger_validate", _broadcast_key(syn_b),
         lambda: _make_validate(syn_b).asNondeterministic(),
-    )  # r14: stable UDF object per broadcast — see _components' note
+    )
     priority_expr = F.lit(4)
     for reason, prio in sorted(MATCH_PRIORITY.items()):
         priority_expr = F.when(F.col("v.reason") == reason, prio).otherwise(priority_expr)

@@ -23,6 +23,27 @@ def default_parallelism() -> int:
     return os.cpu_count() or 4
 
 
+# Default driver heap as a share of host memory: in local mode the
+# driver JVM is the whole engine, and its off-heap, metaspace and the
+# Python workers need the rest (a fixed 24g heap on a 15 GiB host got
+# the JVM OOM-killed at ~14.5 GB RSS).
+_DRIVER_MEM_FRACTION = 0.5
+
+
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else ``_DRIVER_MEM_FRACTION``
+    of the host's MemTotal (8g where /proc/meminfo is unavailable)."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "8g"
+    return f"{int(kb * _DRIVER_MEM_FRACTION) // 1024}m"
+
+
 def get_spark(
     app_name: str = "pids-drg-esoa-spark",
     cpus: int | None = None,
@@ -51,7 +72,7 @@ def get_spark(
                 os.path.join(tempfile.gettempdir(), "spark-graft-warehouse"),
             ),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", default_driver_memory())
         # Long-lived sessions (test suites, notebooks, services) leak
         # broadcast vars and shuffle state until a full GC lets the
         # ContextCleaner reap them; with a large heap that GC comes too

@@ -1,7 +1,7 @@
-"""Writers: CSV/Parquet sinks + the append-only metrics log.
+"""Writers: Parquet sinks + the append-only metrics log.
 
-- S6 CSV sink (io_utils.py:14-16) — for interop; Parquet is the
-  canonical persisted format here (columnar, pushdown-friendly).
+- Parquet is the canonical persisted format here (columnar,
+  pushdown-friendly); S6 CSV interop is Spark's own ``df.write.csv``.
 - S8 append-only metrics history (runners.py:1498-1531) as an
   append-mode Parquet table with a run timestamp column.
 - S7 (Excel report with freeze panes) is a driver-side presentation
@@ -15,13 +15,6 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
-    """S6. single_file=True coalesces to one part — only for small
-    outputs (reports); large tables keep their partitioning."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("header", True).csv(path)
 
 
 def write_parquet(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> None:
@@ -47,7 +40,19 @@ def write_bucketed_table(
     (bucket metadata lives in the catalog, not the parquet footer);
     the session warehouse dir is tmp-scoped by default (session.py).
     No-probe-exchange property pinned by
-    tests/test_sources_io.py::test_bucketed_join_skips_exchange."""
+    tests/test_sources_io.py::test_bucketed_join_skips_exchange.
+
+    Crash-safe overwrite: a run killed mid-session leaves the table's
+    warehouse location behind while a fresh in-memory catalog forgets
+    the table, and saveAsTable then refuses the orphaned location
+    (LOCATION_ALREADY_EXISTS). An overwrite of a table the catalog
+    does not know clears that location first."""
+    spark = df.sparkSession
+    if mode == "overwrite" and not spark.catalog.tableExists(table_name):
+        catalog = spark._jsparkSession.sessionState().catalog()
+        ident = spark._jsparkSession.sessionState().sqlParser().parseTableIdentifier(table_name)
+        location = spark._jvm.org.apache.hadoop.fs.Path(catalog.defaultTablePath(ident))
+        location.getFileSystem(spark._jsc.hadoopConfiguration()).delete(location, True)
     w = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
     w = w.sortBy(*(sort_cols or bucket_cols))
     w.format("parquet").saveAsTable(table_name)

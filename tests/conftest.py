@@ -14,11 +14,6 @@ from pids_drg_esoa_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-# One JVM serves the whole suite (200+ tests, many cached relations);
-# the 8g default heap GC-storms near the end of the run.
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-
-
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)

@@ -1,27 +1,34 @@
-"""functions/exprcache: per-SparkContext memoization of Column trees
-and content-fingerprinted broadcasts (r11 — the tagger's driver-side
-fixed-cost shave). The cache keys must be exact: a broadcast hit is
-equality-by-content, never hash-only."""
+"""functions/exprcache: the per-application session-state registry —
+Column trees, content-keyed broadcasts, UDF memos and checkpoint
+leaves in one LRU store. The cache keys must be exact: a broadcast hit
+is equality-by-content, never hash-only."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from pids_drg_esoa_spark.functions import exprcache
 from pids_drg_esoa_spark.functions.exprcache import (
     cached_broadcast,
-    cached_column,
+    cached_checkpoint,
+    cached_value,
+    checkpoint_count,
 )
 from pids_drg_esoa_spark.functions.tokens import (
     normalize_generic_combination_native,
 )
 
 
+def _is_materialized(leaf) -> bool:
+    return leaf._jdf.queryExecution().analyzed().rdd().isCheckpointed()
+
+
 def test_cached_column_same_object_and_correct(spark):
-    c1 = cached_column("t_upper", "x", lambda: F.upper(F.col("x")))
-    c2 = cached_column("t_upper", "x", lambda: F.upper(F.col("x")))
+    c1 = cached_value("t_upper", "x", lambda: F.upper(F.col("x")))
+    c2 = cached_value("t_upper", "x", lambda: F.upper(F.col("x")))
     assert c1 is c2
     # distinct (name, col) keys build fresh
-    c3 = cached_column("t_upper", "y", lambda: F.upper(F.col("y")))
+    c3 = cached_value("t_upper", "y", lambda: F.upper(F.col("y")))
     assert c3 is not c1
     df = spark.createDataFrame([("ab",)], ["x"])
     assert df.select(c1.alias("u")).first()["u"] == "AB"
@@ -59,3 +66,76 @@ def test_cached_broadcast_nested_containers(spark):
     b1 = cached_broadcast(sc, "t_nested", v)
     b2 = cached_broadcast(sc, "t_nested", {"s": {"m": (1, 2)}, "k": ["x", "y"]})
     assert b1 is b2
+
+
+def test_checkpoint_hit_applies_caller_column_names(spark):
+    """(a) canonical plans ignore aliases, so a sameResult hit must
+    re-apply the caller's names instead of the first caller's."""
+    first = cached_checkpoint(spark.range(40).select((F.col("id") * 7901).alias("a")))
+    other = cached_checkpoint(spark.range(40).select((F.col("id") * 7901).alias("b")))
+    assert first.columns == ["a"] and other.columns == ["b"]
+    assert sorted(r.b for r in other.collect()) == [i * 7901 for i in range(40)]
+    # same names: the stored leaf itself comes back
+    again = cached_checkpoint(spark.range(40).select((F.col("id") * 7901).alias("a")))
+    assert again is first
+
+
+def test_eager_hit_on_lazy_entry_materializes(spark):
+    """(b) eager=True on a hit honours eagerness even when the entry
+    was registered lazily."""
+    def df():
+        return spark.range(3000).select((F.col("id") * 7907).alias("v"))
+
+    lazy = cached_checkpoint(df(), eager=False)
+    eager = cached_checkpoint(df(), eager=True)
+    assert eager is lazy
+    assert _is_materialized(eager)
+
+
+def test_lazy_checkpoint_background_count(spark):
+    leaf = cached_checkpoint(
+        spark.range(123).select((F.col("id") * 7919).alias("v")), eager=False
+    )
+    assert checkpoint_count(leaf) == 123
+    assert _is_materialized(leaf)
+
+
+def test_app_change_drops_entries(spark, monkeypatch):
+    """(c) entries of a previous application are dropped, not kept
+    beside the new application's."""
+    real_app = exprcache._app_id()
+    v1 = cached_value("t_app", (), object)
+    assert cached_value("t_app", (), object) is v1
+    monkeypatch.setattr(exprcache, "_app_id", lambda: "another-app")
+    assert cached_value("t_app", (), object) is not v1
+    monkeypatch.setattr(exprcache, "_app_id", lambda: real_app)
+    assert cached_value("t_app", (), object) is not v1
+
+
+def test_hit_refreshes_and_cap_evicts_lru(spark, monkeypatch):
+    """(d) one LRU cap over the whole store."""
+    monkeypatch.setattr(exprcache, "_MAX_ENTRIES", 3)
+    a, b = cached_value("t_lru", "a", object), cached_value("t_lru", "b", object)
+    cached_value("t_lru", "c", object)
+    assert cached_value("t_lru", "a", object) is a  # hit: a is now newest
+    cached_value("t_lru", "d", object)  # evicts b, the least recently used
+    assert cached_value("t_lru", "a", object) is a
+    assert cached_value("t_lru", "b", object) is not b
+
+
+def test_udf_memo_keys_on_broadcast_id(spark):
+    """(e) the tagger's UDF memos key on Spark's Broadcast.id: two
+    live broadcasts never share a UDF, one broadcast always does."""
+    from pids_drg_esoa_spark.plans.tagger import _broadcast_key
+
+    sc = spark.sparkContext
+    b1, b2 = sc.broadcast({"x": 1}), sc.broadcast({"x": 1})
+
+    def udf_for(b):
+        return cached_value(
+            "t_udf", _broadcast_key(b), lambda: F.udf(lambda v: v + b.value["x"], "long")
+        )
+
+    u1 = udf_for(b1)
+    assert udf_for(b1) is u1
+    assert udf_for(b2) is not u1

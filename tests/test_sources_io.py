@@ -107,6 +107,29 @@ def test_bucketed_join_skips_exchange(spark):
         spark.sql("DROP TABLE IF EXISTS bkt_b")
 
 
+def test_bucketed_overwrite_clears_orphaned_location(spark):
+    """A killed run leaves the table's warehouse location behind while a
+    fresh catalog forgets the table; the overwrite must still succeed
+    instead of failing with LOCATION_ALREADY_EXISTS."""
+    from urllib.parse import urlparse
+
+    from pids_drg_esoa_spark.sources.writers import write_bucketed_table
+
+    spark.sql("DROP TABLE IF EXISTS bkt_orphan")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    orphan = os.path.join(urlparse(warehouse).path or warehouse, "bkt_orphan")
+    os.makedirs(orphan, exist_ok=True)
+    with open(os.path.join(orphan, "part-00000-stale.parquet"), "w") as f:
+        f.write("left by a killed run")
+    try:
+        write_bucketed_table(
+            spark.range(10).selectExpr("id AS k"), "bkt_orphan", ("k",), n_buckets=2
+        )
+        assert spark.table("bkt_orphan").count() == 10
+    finally:
+        spark.sql("DROP TABLE IF EXISTS bkt_orphan")
+
+
 def test_read_jsonl_permissive_and_failfast(spark, tmp_path):
     """JSONL scan: explicit schema, malformed lines quarantined into
     _corrupt_record under PERMISSIVE; FAILFAST raises."""

@@ -624,3 +624,73 @@ def test_multiword_bare_substring_typo_combo(spark):
     assert not hit2.matched
     broken = out["ALUXMINUM HYDROXIDE + MAGNESIUM HYDROXIDE 625 MG TAB"]
     assert not broken.matched
+
+
+def _rows(tagged):
+    def freeze(v):
+        return tuple(v) if isinstance(v, list) else v
+
+    return {
+        tuple(sorted((k, freeze(v)) for k, v in r.asDict().items()))
+        for r in tagged.collect()
+    }
+
+
+def test_repeat_calls_keep_persistent_rdds_flat(spark, dims):
+    """Session state is reused, not re-created: after the first call,
+    repeated tag_descriptions on the same input add no cached RDDs
+    (dims and docs resolve to registry leaves, the persisted tiers to
+    the CacheManager's existing entries)."""
+    esoa = spark.createDataFrame(
+        [("biogesic 500mg tab",), ("amlodipine 10mg tab",), ("amoxicilin 500mg cap",)],
+        "raw_text string",
+    )
+    sizes = []
+    for _ in range(3):
+        tag_descriptions(esoa, **dims).collect()
+        sizes.append(spark.sparkContext._jsc.getPersistentRDDs().size())
+    assert sizes[1] <= sizes[0] and sizes[2] <= sizes[0], sizes
+
+
+def test_concurrent_calls_own_their_persisted_intermediates(spark, dims):
+    """Two tag_descriptions calls from two threads each return their own
+    rows and their own persisted intermediates (no shared tracking
+    state to mix the two lists)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    inputs = [
+        ["paracetamol 500mg tab", "acetaminophen 250mg syrup", "salbutamol 2mg tab"],
+        ["amlodipine 5mg tab", "sodium chloride 0.9% solution", "setirizine 10mg"],
+    ]
+    frames = [spark.createDataFrame([(t,) for t in ts], "raw_text string") for ts in inputs]
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        tagged = list(ex.map(lambda e: tag_descriptions(e, **dims), frames))
+    for got, esoa in zip(tagged, frames):
+        alone = tag_descriptions(esoa, **dims)
+        assert _rows(got) == _rows(alone)
+        assert len(got.persisted_intermediates) == len(alone.persisted_intermediates)
+    ids = [{id(p) for p in t.persisted_intermediates} for t in tagged]
+    assert ids[0] and ids[1] and ids[0].isdisjoint(ids[1])
+
+
+def test_failing_build_unpersists_its_intermediates(spark, dims, monkeypatch):
+    """A build that raises after persisting releases what it cached."""
+    import pids_drg_esoa_spark.plans.tagger as T
+
+    seen = []
+    persist = T._persist
+
+    def recording_persist(df, persisted):
+        seen.append(persist(df, persisted))
+        return seen[-1]
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("planted failure")
+
+    monkeypatch.setattr(T, "_persist", recording_persist)
+    monkeypatch.setattr(T, "w1_select_best", boom)
+    esoa = spark.createDataFrame([("paracetamol 650mg tab",)], "raw_text string")
+    with pytest.raises(RuntimeError, match="planted failure"):
+        tag_descriptions(esoa, **dims)
+    assert seen
+    assert all(not df.storageLevel.useMemory and not df.storageLevel.useDisk for df in seen)
