@@ -23,11 +23,14 @@ Contract:
   cache across runs. The leaves are owned by the session: never pass
   them to ``operators.curation.release_checkpoints``.
 - Background count: a lazily registered checkpoint starts one daemon
-  count job that materializes the leaf; ``checkpoint_count`` returns
+  count job that materializes the leaf, in a thread that carries the
+  caller's Spark local properties; ``checkpoint_count`` returns
   its result, so the caller needs no second count job.
 
-All operations are thread-safe; builds run outside the lock, and when
-two threads build the same key the first stored value wins.
+All operations are thread-safe. A key is built once: the first caller
+stores a ``Future`` under the lock and builds outside it, and
+concurrent callers of the same key wait for that build. A failed build
+is removed and re-raised to every waiter, so the next call retries.
 """
 
 from __future__ import annotations
@@ -40,11 +43,13 @@ from typing import Any
 
 from pyspark import SparkContext
 
+from ..session import inherit_local_properties
+
 # enough for every dim, Column tree, UDF and broadcast one runner or
 # tagger session resolves; bounds fuzz loops over many distinct dims
 _MAX_ENTRIES = 64
 
-_STORE: OrderedDict[tuple, Any] = OrderedDict()
+_STORE: OrderedDict[tuple, Future] = OrderedDict()
 _LOCK = threading.Lock()
 _store_app: str | None = None
 
@@ -68,16 +73,25 @@ def cached_value(name: str, key: Any, build: Callable[[], Any]):
     app, k = _app_id(), (name, key)
     with _LOCK:
         _sync(app)
-        if k in _STORE:
+        slot = _STORE.get(k)
+        owner = slot is None
+        if owner:
+            slot = _STORE[k] = Future()
+            while len(_STORE) > _MAX_ENTRIES:
+                _STORE.popitem(last=False)
+        else:
             _STORE.move_to_end(k)
-            return _STORE[k]
-    value = build()
-    with _LOCK:
-        _sync(app)
-        value = _STORE.setdefault(k, value)
-        _STORE.move_to_end(k)
-        while len(_STORE) > _MAX_ENTRIES:
-            _STORE.popitem(last=False)
+    if not owner:
+        return slot.result()  # waits while another caller builds it
+    try:
+        value = build()
+    except BaseException as exc:
+        with _LOCK:
+            if _STORE.get(k) is slot:
+                del _STORE[k]
+        slot.set_exception(exc)
+        raise
+    slot.set_result(value)
     return value
 
 
@@ -106,7 +120,8 @@ class _Checkpoint:
         self.count: Future | None = None
         if not eager:
             self.count = Future()
-            threading.Thread(target=self._count, daemon=True).start()
+            target = inherit_local_properties(df.sparkSession, self._count)
+            threading.Thread(target=target, daemon=True).start()
 
     def _count(self) -> None:
         try:
@@ -141,10 +156,9 @@ def checkpoint_count(df) -> int:
     """Row count of a leaf returned by ``cached_checkpoint``: the
     background count of a lazily registered leaf, else a count job."""
     with _LOCK:
-        entry = next(
-            (v for v in _STORE.values() if isinstance(v, _Checkpoint) and v.leaf is df),
-            None,
-        )
+        slots = list(_STORE.values())
+    built = (s.result() for s in slots if s.done() and s.exception() is None)
+    entry = next((v for v in built if isinstance(v, _Checkpoint) and v.leaf is df), None)
     if entry is None or entry.count is None:
         return df.count()
     return entry.wait()

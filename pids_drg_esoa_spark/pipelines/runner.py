@@ -6,10 +6,17 @@ Part 1 build unified reference → Part 2 tag Annex F → Part 3 tag eSOA
 coverage metrics (metrics_history) and writes run_summary.md sections
 (run_drugs_all.py:52-117,702-783).
 
-Spark-first: Parts 2-4 are each one DataFrame job over the dims built
-in Part 1; parquet checkpoints between parts are optional (pass
-``checkpoint_dir``) — within one session the whole flow is a single
-lazy DAG.
+Execution shape. Part 1 parses the PNF once into a leaf, builds the four
+unified dims from it and materializes them with the synonym and food
+dims (parquet or bucketed-table copies are optional: pass
+``checkpoint_dir`` or ``bucketed_dims``). Parts 2 and 3 read only those
+dims, so they run concurrently in two driver threads. Each ends at an
+eager ``localCheckpoint`` leaf and then materializes the side Part 4
+reads from it: the Annex candidate index, or the eSOA bridge side.
+Part 4 bridges the two sides and ends at a leaf too. The three summary
+aggregations (Part 2 stats, Part 3 stats, Part 4 reasons) run
+concurrently over those leaves. Each Part's plan is therefore built
+over leaves, never over an earlier Part's derivation.
 """
 
 from __future__ import annotations
@@ -20,8 +27,18 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.bridge import bridge_metrics, bridge_to_drug_codes
+# bridge_to_drug_codes is not called here (Part 4 composes its steps);
+# perfbench/workloads.py wraps it by name on this module, so it stays
+# importable from here.
+from ..plans.bridge import (  # noqa: F401
+    annex_bridge_side,
+    bridge_metrics,
+    bridge_sides,
+    bridge_to_drug_codes,
+    esoa_bridge_side,
+)
 from ..plans.tagger import tag_descriptions
+from ..session import run_concurrently
 from ..sources.writers import append_metrics
 from .drugs import (
     build_unified_atc,
@@ -122,7 +139,12 @@ def run_drugs_all(
     (plan property pinned by tests/test_runner_cli.py::
     test_bucketed_dims_layout)."""
     # ---- Part 1: unified reference ------------------------------------
-    pnf_prepared = prepare_pnf(inputs["pnf"])
+    # Parse the PNF once: every branch that reads pnf_prepared (the
+    # generics spine, its anti-joins and pnf_raw leg, the ATC build)
+    # would otherwise re-run its pandas UDFs.
+    from ..plans.tagger import _materialize_dim, _materialize_dims
+
+    pnf_prepared = _materialize_dim(prepare_pnf(inputs["pnf"]))
     generics = build_unified_generics(
         inputs["drugbank_generics"], inputs["who_atc"], pnf_prepared
     )
@@ -159,13 +181,6 @@ def run_drugs_all(
         brands = spark.read.parquet(os.path.join(checkpoint_dir, "unified_brands"))
         mixtures = spark.read.parquet(os.path.join(checkpoint_dir, "unified_mixtures"))
 
-    # Materialize the dims once for BOTH tag() calls (annex + eSOA);
-    # tag_descriptions would otherwise localCheckpoint per call. See
-    # plans/tagger._materialize_dim / SCALE.md measured lesson #3.
-    from ..plans.tagger import _materialize_dims
-
-    generics, atc, brands, mixtures = _materialize_dims(generics, atc, brands, mixtures)
-
     synonyms = inputs.get("synonyms")  # optional (synonym, generic_name) rows
     # Also accept the reference's unified_synonyms shape directly
     # (drugbank_id, generic_name, synonyms pipe-joined —
@@ -189,6 +204,13 @@ def run_drugs_all(
     # unmatched texts that hit it are food, not unrecognized drugs
     # (runners.py:1428-1496)
     fda_food = inputs.get("fda_food")
+
+    # Materialize the dims once for BOTH tag() calls (annex + eSOA);
+    # tag_descriptions would otherwise localCheckpoint per call. See
+    # plans/tagger._materialize_dim / SCALE.md measured lesson #3.
+    generics, atc, brands, mixtures, synonyms, fda_food = _materialize_dims(
+        generics, atc, brands, mixtures, synonyms, fda_food
+    )
 
     def tag(df: DataFrame, text_col: str, with_food: bool = False) -> DataFrame:
         return tag_descriptions(
@@ -220,59 +242,61 @@ def run_drugs_all(
             }
         )
 
-    # ---- Part 2: Annex F tagging --------------------------------------
+    # ---- Parts 2 and 3, concurrently -----------------------------------
+    # Neither Part reads the other, so each runs in its own driver
+    # thread. Each ends at an eager localCheckpoint leaf (its output is
+    # consumed by the stats, Part 4 and the caller) and then
+    # materializes the side Part 4 reads from it.
+    #
     # annex_order pins the reference's candidate insertion order (the
     # W3 stable-sort tie-break) to the Annex input row order.
     annex_src = inputs["annex_f"].withColumn(
         "annex_order", F.monotonically_increasing_id()
     )
-    annex_tagged = _fill_untaggable(
-        tag(
-            annex_src.select(F.col("drug_description").alias("raw_text")), "raw_text"
-        ).join(
-            annex_src.select(
-                "drug_code", F.col("drug_description").alias("raw_text"), "annex_order"
-            ),
-            "raw_text",
-            "right",
-        )
-    ).persist()
 
-    # ---- Part 3: eSOA tagging (dedupe-by-text inside the tagger) ------
-    # Join back to the INPUT ROWS (A6): the reference's esoa_with_atc
-    # is one row per input row — tag_batch(deduplicate=True) merges
-    # results back by text (runners.py:193-231) — so a corpus with
-    # duplicate texts keeps its duplicates in the output AND in the
-    # coverage denominators (r11 metrics-parity catch: the engine
+    def part2() -> tuple[DataFrame, DataFrame]:
+        annex_tagged = _fill_untaggable(
+            tag(
+                annex_src.select(F.col("drug_description").alias("raw_text")), "raw_text"
+            ).join(
+                annex_src.select(
+                    "drug_code", F.col("drug_description").alias("raw_text"), "annex_order"
+                ),
+                "raw_text",
+                "right",
+            )
+        ).localCheckpoint(eager=True)
+        return annex_tagged, annex_bridge_side(annex_tagged)
+
+    # Part 3 joins back to the INPUT ROWS (A6): the reference's
+    # esoa_with_atc is one row per input row — tag_batch(deduplicate=
+    # True) merges results back by text (runners.py:193-231) — so a
+    # corpus with duplicate texts keeps its duplicates in the output AND
+    # in the coverage denominators (r11 metrics-parity catch: the engine
     # previously emitted one row per DISTINCT text, silently shrinking
-    # Part-3/Part-4 totals on duplicate-bearing corpora).
-    # persist: consumed by coverage, Part 4, and the caller.
-    esoa_tagged = _fill_untaggable(
-        inputs["esoa"]
-        .join(tag(inputs["esoa"], "raw_text", with_food=True), "raw_text", "left")
-    ).persist()
+    # Part-3/Part-4 totals on duplicate-bearing corpora). Part 4 bridges
+    # per DISTINCT text (its internal aggregations assume one row per
+    # text) and consumes the TAGGED columns (the reference reads
+    # annex_f_with_atc + esoa_with_atc, runners.py:287-330) — candidate
+    # keys come from matched_generic_name and the dose/form/route token
+    # columns, never from re-parsed raw text.
+    def part3() -> tuple[DataFrame, DataFrame]:
+        esoa_tagged = _fill_untaggable(
+            inputs["esoa"]
+            .join(tag(inputs["esoa"], "raw_text", with_food=True), "raw_text", "left")
+        ).localCheckpoint(eager=True)
+        return esoa_tagged, esoa_bridge_side(esoa_tagged.dropDuplicates(["raw_text"]))
+
+    (annex_tagged, annex_side), (esoa_tagged, esoa_side) = run_concurrently(
+        spark, part2, part3
+    )
 
     # ---- Part 4: bridge to drug codes ---------------------------------
-    # Part 4 consumes the TAGGED outputs of Parts 2 and 3 (the
-    # reference reads annex_f_with_atc + esoa_with_atc, runners.py:
-    # 287-330) — candidate keys come from matched_generic_name and the
-    # dose/form/route token columns, never from re-parsed raw text.
-    # Bridge per DISTINCT text (its internal aggregations assume one
-    # row per text), then expand back to input rows (A6) so the output
+    # Expand the per-text bridge back to input rows (A6) so the output
     # and its totals are per ROW like the reference's.
-    # Join back on COALESCE(text, '') — the reference's fillna('')
-    # means a null-text row rides the ''-text bridge result (a null
-    # join key would never match and the row would silently lose its
-    # Part-4 reason: no_generic, like the reference's).
     bridged = (
         inputs["esoa"].select("raw_text")
-        .join(
-            bridge_to_drug_codes(
-                esoa_tagged.dropDuplicates(["raw_text"]), annex_tagged
-            ),
-            "raw_text",
-            "left",
-        )
+        .join(bridge_sides(esoa_side, annex_side), "raw_text", "left")
         # NULL-text rows can never equi-join (null keys): the
         # reference's fillna('') hands them the ''-row result, which
         # for a null text is ALWAYS (drug_code NULL, generic NULL,
@@ -292,13 +316,20 @@ def run_drugs_all(
                 F.when(F.col("raw_text").isNull(), F.lit("no_generic")),
             ),
         )
-        .persist()
+        .localCheckpoint(eager=True)
     )
 
     # ---- summary + metrics (run_drugs_all.py:52-117) ------------------
-    a_n, a_atc, a_db, a_coarse, a_reasons = _part_stats(annex_tagged)
-    e_n, e_atc, e_db, e_coarse, e_reasons = _part_stats(esoa_tagged)
-    reason_rows = bridge_metrics(bridged).collect()
+    (
+        (a_n, a_atc, a_db, a_coarse, a_reasons),
+        (e_n, e_atc, e_db, e_coarse, e_reasons),
+        reason_rows,
+    ) = run_concurrently(
+        spark,
+        lambda: _part_stats(annex_tagged),
+        lambda: _part_stats(esoa_tagged),
+        lambda: bridge_metrics(bridged).collect(),
+    )
     n_bridged = sum(r.n for r in reason_rows if r.match_reason == "matched_perfect")
     n_total = sum(r.n for r in reason_rows)
     p4_reasons = {

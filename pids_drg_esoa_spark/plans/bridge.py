@@ -487,6 +487,14 @@ def build_annex_index_ref(annex_tagged: DataFrame) -> DataFrame:
     )
 
 
+def _esoa_ref_mode(tagged: DataFrame) -> bool:
+    return {"dose", "form", "route", "drug_amount_mg"}.issubset(tagged.columns)
+
+
+def _annex_ref_mode(annex_f: DataFrame) -> bool:
+    return {"generic_name", "dose", "form", "route"}.issubset(annex_f.columns)
+
+
 def bridge_to_drug_codes(tagged: DataFrame, annex_f: DataFrame) -> DataFrame:
     """tagged: output of plans.tagger (raw_text, generic_name, …).
     Returns one row per raw_text with (drug_code, match_reason) using
@@ -495,9 +503,10 @@ def bridge_to_drug_codes(tagged: DataFrame, annex_f: DataFrame) -> DataFrame:
     Two modes: when both relations carry the tagged Part-2/3 columns
     (dose/form/route token strings + F15 structured fields), Part 4
     runs the reference's column-driven path; otherwise (dims-only
-    planted oracles) both sides are parsed from raw text."""
-    ref_mode = {"dose", "form", "route", "drug_amount_mg"}.issubset(tagged.columns)
-    annex_ref_mode = {"generic_name", "dose", "form", "route"}.issubset(annex_f.columns)
+    planted oracles) both sides are parsed from raw text. Composes
+    ``esoa_bridge_side``, ``annex_bridge_side`` and ``bridge_sides``,
+    which callers holding both tagged relations may run separately."""
+    ref_mode, annex_ref_mode = _esoa_ref_mode(tagged), _annex_ref_mode(annex_f)
     if ref_mode != annex_ref_mode:
         # The two modes build INCOMPATIBLE join keys (reference-mode
         # lookup keys are UPPERCASE, dims-only components lowercase):
@@ -510,43 +519,64 @@ def bridge_to_drug_codes(tagged: DataFrame, annex_f: DataFrame) -> DataFrame:
             f"{'reference' if annex_ref_mode else 'dims-only'}-mode; "
             "tag both relations (runner.run_drugs_all does) or pass both raw"
         )
-    if ref_mode:
-        esoa = _esoa_side_ref(tagged).localCheckpoint(eager=True)
-    else:
-        esoa = (
-            tagged.select(
-                "raw_text",
-                "generic_name",
-                F.col("matched").alias("has_generic"),
-                F.filter(
-                    F.split(F.lower(F.coalesce("generic_name", F.lit(""))), " \\+ "),
-                    lambda x: x != "",
-                ).alias("components"),
-            )
-            .withColumn("esoa_parsed", parse_side(F.col("raw_text"), F.col("generic_name")))
-            .select(
-                "raw_text", "generic_name", "has_generic", "components",
-                F.col("esoa_parsed.dose").alias("esoa_dose"),
-                F.col("esoa_parsed.form").alias("esoa_form"),
-                F.col("esoa_parsed.route").alias("esoa_route"),
-                F.col("esoa_parsed.details").alias("esoa_details"),
-            )
-            # localCheckpoint, not persist: parse_side embeds the native
-            # dose/form/route expression trees; candidate gen and the
-            # final left join would each copy that subtree into the plan
-            # and Catalyst re-walks it per transformation (same pathology
-            # as the tagger docs relation — see plans/tagger.py).
-            .localCheckpoint(eager=True)
+    return bridge_sides(esoa_bridge_side(tagged), annex_bridge_side(annex_f))
+
+
+def esoa_bridge_side(tagged: DataFrame) -> DataFrame:
+    """The eSOA side of Part 4 as a materialized leaf: one row per
+    input row with its lookup components, dose key, form, route and
+    W3 details. Reference mode reads the tagged Part-3 columns;
+    dims-only mode parses the raw text."""
+    if _esoa_ref_mode(tagged):
+        return _esoa_side_ref(tagged).localCheckpoint(eager=True)
+    return (
+        tagged.select(
+            "raw_text",
+            "generic_name",
+            F.col("matched").alias("has_generic"),
+            F.filter(
+                F.split(F.lower(F.coalesce("generic_name", F.lit(""))), " \\+ "),
+                lambda x: x != "",
+            ).alias("components"),
         )
+        .withColumn("esoa_parsed", parse_side(F.col("raw_text"), F.col("generic_name")))
+        .select(
+            "raw_text", "generic_name", "has_generic", "components",
+            F.col("esoa_parsed.dose").alias("esoa_dose"),
+            F.col("esoa_parsed.form").alias("esoa_form"),
+            F.col("esoa_parsed.route").alias("esoa_route"),
+            F.col("esoa_parsed.details").alias("esoa_details"),
+        )
+        # localCheckpoint, not persist: parse_side embeds the native
+        # dose/form/route expression trees; candidate gen and the
+        # final left join would each copy that subtree into the plan
+        # and Catalyst re-walks it per transformation (same pathology
+        # as the tagger docs relation — see plans/tagger.py).
+        .localCheckpoint(eager=True)
+    )
+
+
+def annex_bridge_side(annex_f: DataFrame) -> DataFrame:
+    """The Annex candidate index of Part 4 as a materialized leaf: one
+    row per (component → drug code). Reference mode reads the tagged
+    Part-2 columns; dims-only mode parses the descriptions."""
     # materialize: the index embeds parse_side's native dose/form
     # expression trees; broadcasting a leaf keeps them out of the
     # probe-side plan (see plans/tagger._materialize_dim)
     from .tagger import _materialize_dim
 
-    index_df = (
-        build_annex_index_ref(annex_f) if annex_ref_mode else build_annex_index(annex_f)
+    return _materialize_dim(
+        build_annex_index_ref(annex_f) if _annex_ref_mode(annex_f)
+        else build_annex_index(annex_f)
     )
-    index_mat = _materialize_dim(index_df)
+
+
+def bridge_sides(esoa: DataFrame, index_mat: DataFrame) -> DataFrame:
+    """Part 4 over the two sides built by ``esoa_bridge_side`` and
+    ``annex_bridge_side`` (both of one mode): candidates, the strict
+    dose∧form∧route gate, the W3 pick and the reason ladder. Returns
+    one row per eSOA-side row with (raw_text, generic_name, drug_code,
+    match_reason)."""
     index = F.broadcast(index_mat)
 
     cand = (

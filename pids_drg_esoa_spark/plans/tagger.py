@@ -34,6 +34,8 @@ shuffles; the only wide op is the per-doc candidate window, whose key
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -41,6 +43,7 @@ from pyspark.sql import functions as F
 import pandas as pd
 from pyspark.sql import types as T
 
+from ..session import run_concurrently
 from ..functions.exprcache import cached_checkpoint, cached_value, checkpoint_count
 from ..functions.fuzzy import fuzz_ratio, length_band_filter
 from ..functions.routes_forms import parse_form_col
@@ -868,14 +871,12 @@ def _materialize_dims(*dims: DataFrame | None) -> list[DataFrame | None]:
     per dim is dominated by one-time codegen of its derivation
     expression (~2 s for prepare_pnf's 25-col batch), so overlapping
     them turns 5 × 2.3 s sequential into ~max(2.3 s)."""
-    from concurrent.futures import ThreadPoolExecutor
-
     todo = [d for d in dims if d is not None]
     if not todo:
         return list(dims)
-    with ThreadPoolExecutor(max_workers=len(todo)) as ex:
-        done = list(ex.map(_materialize_dim, dims))
-    return done
+    return run_concurrently(
+        todo[0].sparkSession, *(functools.partial(_materialize_dim, d) for d in dims)
+    )
 
 
 def w1_select_best(
@@ -1189,8 +1190,6 @@ def _tag_descriptions_impl(
     # job over an already-materialized leaf, but sequentially they cost
     # three blocking driver round-trips per tag() call — same
     # overlapping rule as _materialize_dims.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _collect_syn():
         if synonyms_dim is None:
             return []
@@ -1209,11 +1208,9 @@ def _tag_descriptions_impl(
             .collect()
         )
 
-    with ThreadPoolExecutor(max_workers=3) as ex:
-        f_syn = ex.submit(_collect_syn)
-        f_br = ex.submit(_collect_brands)
-        f_mw = ex.submit(_collect_mw)
-        syn_rows, brand_rows, mw_rows = f_syn.result(), f_br.result(), f_mw.result()
+    syn_rows, brand_rows, mw_rows = run_concurrently(
+        spark, _collect_syn, _collect_brands, _collect_mw
+    )
 
     syn_map: dict[str, str] = dict(seed_rows)
     if synonyms_dim is not None:

@@ -12,8 +12,12 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 
 def default_parallelism() -> int:
@@ -87,3 +91,27 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def inherit_local_properties(spark: SparkSession, fn: Callable) -> Callable:
+    """``fn`` made to run, in whatever thread calls it, with a copy of
+    the calling thread's Spark local properties taken now: job group,
+    description, job tags and scheduler pool. Without pinned thread
+    mode (``PYSPARK_PIN_THREAD=false``) PySpark cannot carry them into
+    another thread, and ``fn`` is returned as it is."""
+    wrap = inheritable_thread_target(spark)
+    return fn if wrap is spark else wrap(fn)
+
+
+def run_concurrently(spark: SparkSession, *fns: Callable[[], Any]) -> list:
+    """Run each of ``fns`` in its own driver thread (Spark schedules
+    jobs from several threads) and return their results in order. Once
+    all have ended, the failure of the earliest failing ``fn`` in
+    argument order is re-raised. Each thread carries the caller's Spark
+    local properties (``inherit_local_properties``). Each gets its own
+    wrapper, because the threads running one wrapper share its copy of
+    the properties, and every SQL execution writes its execution id
+    there."""
+    with ThreadPoolExecutor(max_workers=len(fns)) as ex:
+        futures = [ex.submit(inherit_local_properties(spark, fn)) for fn in fns]
+        return [f.result() for f in futures]

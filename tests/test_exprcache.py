@@ -5,6 +5,12 @@ is equality-by-content, never hash-only."""
 
 from __future__ import annotations
 
+import sys
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
+
+import pytest
 from pyspark.sql import functions as F
 
 from pids_drg_esoa_spark.functions import exprcache
@@ -139,3 +145,66 @@ def test_udf_memo_keys_on_broadcast_id(spark):
     u1 = udf_for(b1)
     assert udf_for(b1) is u1
     assert udf_for(b2) is not u1
+
+
+def test_concurrent_callers_build_a_key_once(spark):
+    """Two threads asking for one key while it builds share ONE build:
+    the second waits for the first caller's value instead of building
+    its own (duplicate checkpoint jobs, leaked cached blocks)."""
+    calls = []
+
+    def build():
+        calls.append(threading.get_ident())
+        time.sleep(1.0)
+        return object()
+
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        a, b = ex.map(lambda _: cached_value("t_once", (), build), range(2), timeout=60)
+    assert len(calls) == 1
+    assert a is b
+
+
+def test_concurrent_builds_stress(spark):
+    """More threads than cores over a few keys, with frequent thread
+    switches: every key is built once and every caller gets its value."""
+    builds: dict[int, int] = {}
+    builds_lock = threading.Lock()
+
+    def build(k):
+        with builds_lock:
+            builds[k] = builds.get(k, 0) + 1
+        time.sleep(0.01)
+        return ("value", k)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=32) as ex:
+            got = list(ex.map(
+                lambda i: cached_value("t_stress", i % 8, lambda: build(i % 8)),
+                range(256), timeout=60,
+            ))
+    finally:
+        sys.setswitchinterval(interval)
+    assert builds == dict.fromkeys(range(8), 1)
+    assert all(v == ("value", i % 8) for i, v in enumerate(got))
+
+
+def test_failed_build_reraises_to_waiters_and_next_call_rebuilds(spark):
+    started = threading.Event()
+
+    def failing():
+        started.set()
+        time.sleep(1.0)
+        raise ValueError("boom")
+
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        owner = ex.submit(cached_value, "t_fail", (), failing)
+        assert started.wait(timeout=60)
+        waiter = ex.submit(cached_value, "t_fail", (), lambda: "waiter built")
+        with pytest.raises(ValueError, match="boom"):
+            owner.result(timeout=60)
+        with pytest.raises(ValueError, match="boom"):
+            waiter.result(timeout=60)
+    assert cached_value("t_fail", (), lambda: "rebuilt") == "rebuilt"
+    assert cached_value("t_fail", (), lambda: "again") == "rebuilt"

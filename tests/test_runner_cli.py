@@ -185,6 +185,132 @@ def test_reference_shaped_synonyms_input(spark, flow_inputs):
     assert row["generic_name"] == "PARACETAMOL"
 
 
+def _sorted_rows(df):
+    return sorted(repr(r) for r in df.collect())
+
+
+def test_concurrent_runner_matches_sequential_flow(spark, flow_inputs, monkeypatch):
+    """run_drugs_all tags Annex F and eSOA concurrently and ends each
+    Part at a checkpoint leaf. The same Parts composed one after the
+    other from the public functions give the same rows, coverage and
+    reason counts, and the unified builders read the PNF as a leaf
+    (parsed once, not once per branch)."""
+    from pyspark.sql import functions as F
+
+    from pids_drg_esoa_spark.pipelines import drugs, runner
+    from pids_drg_esoa_spark.plans.bridge import bridge_metrics, bridge_to_drug_codes
+    from pids_drg_esoa_spark.plans.tagger import tag_descriptions
+
+    pnf_seen = []
+    for name in ("build_unified_generics", "build_unified_atc"):
+        def spy(*args, _real=getattr(runner, name), **kwargs):
+            pnf_seen.append(args[2])
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(runner, name, spy)
+    res = runner.run_drugs_all(spark, flow_inputs)
+    assert len(pnf_seen) == 2
+    for pnf in pnf_seen:
+        assert pnf._jdf.queryExecution().optimizedPlan().children().size() == 0
+
+    # the sequential flow: tag Annex, then tag eSOA, then bridge
+    i = flow_inputs
+    pnf = drugs.prepare_pnf(i["pnf"])
+    dims = dict(
+        generics_dim=drugs.build_unified_generics(i["drugbank_generics"], i["who_atc"], pnf),
+        atc_dim=runner.flag_combination_atc(drugs.build_unified_atc(
+            i["drugbank_atc"], i["who_atc"], pnf, drugbank_generics=i["drugbank_generics"])),
+        brands_dim=drugs.build_unified_brands(
+            i["fda_brands"], i["drugbank_brands"], drugbank_generics=i["drugbank_generics"]),
+        mixtures_dim=drugs.build_unified_mixtures(i["mixtures"]).selectExpr(
+            "component_key", "mixture_name", "drugbank_id"),
+    )
+    fill = {
+        "matched": F.coalesce(F.col("matched"), F.lit(False)),
+        "match_reason": F.coalesce(F.col("match_reason"), F.lit("no_candidates")),
+    }
+    annex_src = i["annex_f"].withColumn("annex_order", F.monotonically_increasing_id())
+    annex = tag_descriptions(
+        annex_src.select(F.col("drug_description").alias("raw_text")), **dims
+    ).join(
+        annex_src.select("drug_code", F.col("drug_description").alias("raw_text"),
+                         "annex_order"),
+        "raw_text", "right",
+    ).withColumns(fill)
+    esoa = i["esoa"].join(tag_descriptions(i["esoa"], **dims), "raw_text", "left") \
+        .withColumns(fill)
+    bridged = i["esoa"].select("raw_text").join(
+        bridge_to_drug_codes(esoa.dropDuplicates(["raw_text"]), annex), "raw_text", "left"
+    )
+
+    for got, want in ((res.annex_with_atc, annex), (res.esoa_with_atc, esoa),
+                      (res.esoa_with_drug_code, bridged)):
+        assert got.columns == want.columns
+        assert _sorted_rows(got) == _sorted_rows(want)
+
+    def n_where(df, cond):
+        return df.filter(cond).count()
+
+    def coarse(df):
+        out: dict[str, int] = {}
+        for r in df.select("matched", "match_reason").collect():
+            if r.match_reason is not None:
+                key = "matched" if r.matched else r.match_reason
+                out[key] = out.get(key, 0) + 1
+        return out
+
+    assert res.coverage == {
+        "annex_total": annex.count(),
+        "annex_atc": n_where(annex, F.col("atc_primary").isNotNull()),
+        "annex_drugbank": n_where(annex, F.col("drugbank_id").isNotNull()),
+        "esoa_total": esoa.count(),
+        "esoa_atc": n_where(esoa, F.col("atc_primary").isNotNull()),
+        "esoa_drugbank": n_where(esoa, F.col("drugbank_id").isNotNull()),
+        "esoa_drug_code": n_where(bridged, F.col("match_reason") == "matched_perfect"),
+    }
+    assert res.reason_counts == {
+        "annex_f": coarse(annex),
+        "esoa": coarse(esoa),
+        "esoa_to_drug_code": {
+            r.match_reason: r.n for r in bridge_metrics(bridged).collect()
+            if r.match_reason is not None
+        },
+    }
+
+
+def test_run_jobs_carry_the_callers_job_group(spark, flow_inputs):
+    """Every job run_drugs_all submits, from any of its driver threads
+    (Part threads, dim materialization, dict collects, background
+    counts), is in the job group the caller set."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker_job(group: str) -> int:
+        sc.setJobGroup(group, group)
+        sc.parallelize([1], 1).count()
+        for _ in range(300):  # the status store is fed asynchronously
+            ids = tracker.getJobIdsForGroup(group)
+            if ids:
+                return max(ids)
+            time.sleep(0.1)
+        raise AssertionError(f"marker job of {group} never reached the status store")
+
+    try:
+        first = marker_job("runner-group-before")
+        sc.setJobGroup("runner-group-run", "run_drugs_all")
+        run_drugs_all(spark, flow_inputs)
+        last = marker_job("runner-group-after")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    run_jobs = set(range(first + 1, last))
+    assert run_jobs
+    assert run_jobs - set(tracker.getJobIdsForGroup("runner-group-run")) == set()
+
+
 def test_cli_curate_from_jsonl(spark, tmp_path):
     """`cli curate`: JSONL corpus in (one malformed line quarantined),
     per-operator parquet artifacts out."""
