@@ -9,14 +9,19 @@ coverage metrics (metrics_history) and writes run_summary.md sections
 Execution shape. Part 1 parses the PNF once into a leaf, builds the four
 unified dims from it and materializes them with the synonym and food
 dims (parquet or bucketed-table copies are optional: pass
-``checkpoint_dir`` or ``bucketed_dims``). Parts 2 and 3 read only those
-dims, so they run concurrently in two driver threads. Each ends at an
-eager ``localCheckpoint`` leaf and then materializes the side Part 4
-reads from it: the Annex candidate index, or the eSOA bridge side.
-Part 4 bridges the two sides and ends at a leaf too. The three summary
-aggregations (Part 2 stats, Part 3 stats, Part 4 reasons) run
-concurrently over those leaves. Each Part's plan is therefore built
-over leaves, never over an earlier Part's derivation.
+``checkpoint_dir`` or ``bucketed_dims``). Parts 2 and 3 tag against the
+same dims, and a text's tagged row depends only on the text and the
+dims, so ONE ``tag_descriptions`` call tags the union of the Annex
+descriptions and the eSOA texts, without the food dim, and ends at an
+eager ``localCheckpoint`` leaf. Parts 2 and 3 then run concurrently in
+two driver threads: each joins its input rows back to that leaf (Part 3
+applies the food fallback, ``apply_fda_food``, to its side only), ends
+at an eager leaf of its own and materializes the side Part 4 reads from
+it: the Annex candidate index, or the eSOA bridge side. Part 4 bridges
+the two sides and ends at a leaf too. The three summary aggregations
+(Part 2 stats, Part 3 stats, Part 4 reasons) run concurrently over
+those leaves. Each Part's plan is therefore built over leaves, never
+over an earlier Part's derivation.
 """
 
 from __future__ import annotations
@@ -37,7 +42,7 @@ from ..plans.bridge import (  # noqa: F401
     bridge_to_drug_codes,
     esoa_bridge_side,
 )
-from ..plans.tagger import tag_descriptions
+from ..plans.tagger import apply_fda_food, tag_descriptions
 from ..session import run_concurrently
 from ..sources.writers import append_metrics
 from .drugs import (
@@ -205,22 +210,12 @@ def run_drugs_all(
     # (runners.py:1428-1496)
     fda_food = inputs.get("fda_food")
 
-    # Materialize the dims once for BOTH tag() calls (annex + eSOA);
-    # tag_descriptions would otherwise localCheckpoint per call. See
+    # Materialize the dims once, ahead of the tag pass and the food
+    # fallback; tag_descriptions would otherwise localCheckpoint them. See
     # plans/tagger._materialize_dim / SCALE.md measured lesson #3.
     generics, atc, brands, mixtures, synonyms, fda_food = _materialize_dims(
         generics, atc, brands, mixtures, synonyms, fda_food
     )
-
-    def tag(df: DataFrame, text_col: str, with_food: bool = False) -> DataFrame:
-        return tag_descriptions(
-            df, generics_dim=generics, atc_dim=atc, brands_dim=brands,
-            mixtures_dim=mixtures, synonyms_dim=synonyms,
-            # the food fallback is an eSOA-side disambiguator in the
-            # reference; Annex descriptions are drugs by construction
-            fda_food_dim=fda_food if with_food else None,
-            text_col=text_col,
-        )
 
     # Blank/null texts: the reference tags THROUGH fillna('') — a
     # blank text reaches its tagger and comes back matched=False with
@@ -242,23 +237,33 @@ def run_drugs_all(
             }
         )
 
-    # ---- Parts 2 and 3, concurrently -----------------------------------
-    # Neither Part reads the other, so each runs in its own driver
-    # thread. Each ends at an eager localCheckpoint leaf (its output is
-    # consumed by the stats, Part 4 and the caller) and then
-    # materializes the side Part 4 reads from it.
+    # ---- Parts 2 and 3: one tag pass, two join-backs ------------------
+    # A text's tagged row depends only on the text and the dims (pinned
+    # by tests/test_tagger.py::test_tagging_is_batch_independent), so
+    # the Annex descriptions and the eSOA texts are tagged in ONE call:
+    # a text present in both is tagged once, and the tag cascade's
+    # fixed cost is paid once per run. The result ends at an eager
+    # localCheckpoint leaf that both Parts read.
     #
     # annex_order pins the reference's candidate insertion order (the
     # W3 stable-sort tie-break) to the Annex input row order.
     annex_src = inputs["annex_f"].withColumn(
         "annex_order", F.monotonically_increasing_id()
     )
+    tagged = tag_descriptions(
+        annex_src.select(F.col("drug_description").alias("raw_text"))
+        .unionByName(inputs["esoa"].select("raw_text")),
+        generics_dim=generics, atc_dim=atc, brands_dim=brands,
+        mixtures_dim=mixtures, synonyms_dim=synonyms,
+    ).localCheckpoint(eager=True)
 
+    # Each Part joins its input rows back to the leaf in its own driver
+    # thread, ends at an eager localCheckpoint leaf (its output is
+    # consumed by the stats, Part 4 and the caller) and then
+    # materializes the side Part 4 reads from it.
     def part2() -> tuple[DataFrame, DataFrame]:
         annex_tagged = _fill_untaggable(
-            tag(
-                annex_src.select(F.col("drug_description").alias("raw_text")), "raw_text"
-            ).join(
+            tagged.join(
                 annex_src.select(
                     "drug_code", F.col("drug_description").alias("raw_text"), "annex_order"
                 ),
@@ -281,10 +286,12 @@ def run_drugs_all(
     # keys come from matched_generic_name and the dose/form/route token
     # columns, never from re-parsed raw text.
     def part3() -> tuple[DataFrame, DataFrame]:
-        esoa_tagged = _fill_untaggable(
-            inputs["esoa"]
-            .join(tag(inputs["esoa"], "raw_text", with_food=True), "raw_text", "left")
-        ).localCheckpoint(eager=True)
+        esoa_tagged = inputs["esoa"].join(tagged, "raw_text", "left")
+        if fda_food is not None:
+            # the food fallback is an eSOA-side disambiguator in the
+            # reference; Annex descriptions are drugs by construction
+            esoa_tagged = apply_fda_food(esoa_tagged, fda_food)
+        esoa_tagged = _fill_untaggable(esoa_tagged).localCheckpoint(eager=True)
         return esoa_tagged, esoa_bridge_side(esoa_tagged.dropDuplicates(["raw_text"]))
 
     (annex_tagged, annex_side), (esoa_tagged, esoa_side) = run_concurrently(

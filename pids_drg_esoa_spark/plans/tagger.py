@@ -1590,16 +1590,24 @@ def _tag_descriptions_impl(
         matched.alias("matched"),
     )
     if fda_food_dim is not None:
-        tagged = _apply_fda_food(tagged, fda_food_dim)
+        tagged = apply_fda_food(tagged, fda_food_dim)
     return tagged
 
 
-def _apply_fda_food(tagged: DataFrame, fda_food_dim: DataFrame) -> DataFrame:
+def apply_fda_food(tagged: DataFrame, fda_food_dim: DataFrame) -> DataFrame:
     """FDA food disambiguation (runners.py:1428-1496): an UNMATCHED
     text that hits the food registry (whole text, else any token ≥ 4
     chars) is food, not an unrecognized drug — label it so instead of
-    'unmatched'. Broadcast lookups; token probe only on the unmatched
-    slice."""
+    'unmatched'. ``tagged`` is any relation with the tagger's
+    ``raw_text``/``matched``/``match_reason`` columns: one row per
+    distinct text (``tag_descriptions(..., fda_food_dim=)``) or the
+    input rows joined back to a tagged leaf (the runner's eSOA side).
+
+    Both food lookups run per distinct text, matched or not, and are
+    joined into ``tagged`` ONCE: a second branch that filtered
+    ``tagged`` on ``matched`` would re-run the whole tag cascade under
+    it. Only unmatched rows take a label: the final
+    ``when(~matched, ...)`` decides."""
     food = F.broadcast(
         fda_food_dim.select(
             F.upper(F.trim("food_name")).alias("food_key"),
@@ -1611,19 +1619,26 @@ def _apply_fda_food(tagged: DataFrame, fda_food_dim: DataFrame) -> DataFrame:
     # dropDuplicates, whose per-partition survivor would flip the
     # emitted reason between runs
     direct = food.groupBy("food_key").agg(F.min("food_type").alias("direct_type"))
-    with_direct = tagged.join(
-        F.broadcast(direct), F.upper(F.trim(tagged.raw_text)) == direct.food_key, "left"
-    ).drop("food_key")
-
-    unmatched = with_direct.filter(~F.col("matched") & F.col("direct_type").isNull())
-    tok = unmatched.select(
-        "raw_text",
-        F.posexplode(F.split(F.upper(F.trim("raw_text")), r"\s+")).alias("pos", "tok"),
-    ).filter(F.length("tok") >= 4)
+    # only the text column is read here, so the optimizer drops the
+    # cascade's outer joins under this distinct and reads the texts
+    # from the doc leaf
+    texts = tagged.select("raw_text").distinct()
     tok_hit = (
-        tok.join(food, tok.tok == food.food_key)
+        texts.select(
+            "raw_text",
+            F.posexplode(F.split(F.upper(F.trim("raw_text")), r"\s+")).alias("pos", "tok"),
+        )
+        .filter(F.length("tok") >= 4)
+        .join(food, F.col("tok") == food.food_key)
         .groupBy("raw_text")
         .agg(F.min_by("food_type", F.struct("pos", "food_type")).alias("token_type"))
+    )
+    hits = (
+        texts.join(
+            F.broadcast(direct), F.upper(F.trim(texts.raw_text)) == direct.food_key, "left"
+        )
+        .drop("food_key")
+        .join(tok_hit, "raw_text", "left")
     )
     # one select over the (large) tagged tree — not withColumn×2 +
     # drop, each a full re-analysis (same r11 plan-cost rule as the
@@ -1635,7 +1650,7 @@ def _apply_fda_food(tagged: DataFrame, fda_food_dim: DataFrame) -> DataFrame:
             F.concat(F.col("token_type"), F.lit("_partial")),
         ),
     )
-    joined = with_direct.join(tok_hit, "raw_text", "left")
+    joined = tagged.join(hits, "raw_text", "left")
     dropped = {"direct_type", "token_type"}
     return joined.select(
         *[

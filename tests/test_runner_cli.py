@@ -190,17 +190,34 @@ def _sorted_rows(df):
 
 
 def test_concurrent_runner_matches_sequential_flow(spark, flow_inputs, monkeypatch):
-    """run_drugs_all tags Annex F and eSOA concurrently and ends each
-    Part at a checkpoint leaf. The same Parts composed one after the
-    other from the public functions give the same rows, coverage and
-    reason counts, and the unified builders read the PNF as a leaf
-    (parsed once, not once per branch)."""
+    """run_drugs_all tags the Annex F and eSOA texts in one call, joins
+    each Part's rows back to that leaf concurrently and applies the food
+    fallback to the eSOA side only. The sequential flow composed from the
+    public functions (tag Annex without food, tag eSOA with food, bridge)
+    gives the same rows, columns, coverage and reason counts. One
+    description is in both inputs, stays unmatched and hits the food
+    registry: its Annex row carries no food label. The unified builders
+    read the PNF as a leaf (parsed once, not once per branch)."""
     from pyspark.sql import functions as F
 
     from pids_drg_esoa_spark.pipelines import drugs, runner
     from pids_drg_esoa_spark.plans.bridge import bridge_metrics, bridge_to_drug_codes
     from pids_drg_esoa_spark.plans.tagger import tag_descriptions
 
+    food_text = "ENERGY BISCUIT"
+    i = dict(
+        flow_inputs,
+        fda_food=spark.createDataFrame(
+            [(food_text, "fda_food_product", "R-001")],
+            "food_name string, food_type string, registration string",
+        ),
+        annex_f=flow_inputs["annex_f"].unionByName(
+            spark.createDataFrame([("D003", food_text)], "drug_code string, drug_description string")
+        ),
+        esoa=flow_inputs["esoa"].unionByName(
+            spark.createDataFrame([(food_text,)], "raw_text string")
+        ),
+    )
     pnf_seen = []
     for name in ("build_unified_generics", "build_unified_atc"):
         def spy(*args, _real=getattr(runner, name), **kwargs):
@@ -208,13 +225,12 @@ def test_concurrent_runner_matches_sequential_flow(spark, flow_inputs, monkeypat
             return _real(*args, **kwargs)
 
         monkeypatch.setattr(runner, name, spy)
-    res = runner.run_drugs_all(spark, flow_inputs)
+    res = runner.run_drugs_all(spark, i)
     assert len(pnf_seen) == 2
     for pnf in pnf_seen:
         assert pnf._jdf.queryExecution().optimizedPlan().children().size() == 0
 
     # the sequential flow: tag Annex, then tag eSOA, then bridge
-    i = flow_inputs
     pnf = drugs.prepare_pnf(i["pnf"])
     dims = dict(
         generics_dim=drugs.build_unified_generics(i["drugbank_generics"], i["who_atc"], pnf),
@@ -237,8 +253,9 @@ def test_concurrent_runner_matches_sequential_flow(spark, flow_inputs, monkeypat
                          "annex_order"),
         "raw_text", "right",
     ).withColumns(fill)
-    esoa = i["esoa"].join(tag_descriptions(i["esoa"], **dims), "raw_text", "left") \
-        .withColumns(fill)
+    esoa = i["esoa"].join(
+        tag_descriptions(i["esoa"], **dims, fda_food_dim=i["fda_food"]), "raw_text", "left"
+    ).withColumns(fill)
     bridged = i["esoa"].select("raw_text").join(
         bridge_to_drug_codes(esoa.dropDuplicates(["raw_text"]), annex), "raw_text", "left"
     )
@@ -247,6 +264,18 @@ def test_concurrent_runner_matches_sequential_flow(spark, flow_inputs, monkeypat
                       (res.esoa_with_drug_code, bridged)):
         assert got.columns == want.columns
         assert _sorted_rows(got) == _sorted_rows(want)
+
+    food_rows = {
+        part: df.filter(F.col("raw_text") == food_text).collect()
+        for part, df in (("annex", res.annex_with_atc), ("esoa", res.esoa_with_atc))
+    }
+    assert "food_match" not in res.annex_with_atc.columns
+    assert [(r.matched, r.match_reason) for r in food_rows["annex"]] == [
+        (False, "no_candidates")
+    ]
+    assert [(r.match_reason, r.food_match) for r in food_rows["esoa"]] == [
+        ("fda_food_product", "fda_food_product")
+    ]
 
     def n_where(df, cond):
         return df.filter(cond).count()

@@ -325,18 +325,22 @@ def test_regional_canonical_names(spark, dims):
     assert out["ALBUTEROL NEBULE"].generic_name == "SALBUTAMOL"
 
 
-def test_fda_food_disambiguation(spark, dims):
-    """Unmatched texts that hit the FDA food registry are labeled food
-    (runners.py:1428-1496), not 'unmatched'; matched drugs unaffected."""
-    food = spark.createDataFrame(
+@pytest.fixture(scope="module")
+def fda_food(spark):
+    return spark.createDataFrame(
         [
             ("ENERGY BISCUIT", "fda_food_product", "R-001"),
             ("KOOLAID", "fda_food_brand", "R-002"),
         ],
         "food_name string, food_type string, registration string",
     )
+
+
+def test_fda_food_disambiguation(spark, dims, fda_food):
+    """Unmatched texts that hit the FDA food registry are labeled food
+    (runners.py:1428-1496), not 'unmatched'; matched drugs unaffected."""
     d = dict(dims)
-    d["fda_food_dim"] = food
+    d["fda_food_dim"] = fda_food
     out = _tag(
         spark, d,
         ["ENERGY BISCUIT", "CHOCO KOOLAID DRINK", "PARACETAMOL 500MG TAB", "TRULY UNKNOWN"],
@@ -345,6 +349,22 @@ def test_fda_food_disambiguation(spark, dims):
     assert out["CHOCO KOOLAID DRINK"].match_reason == "fda_food_brand_partial"
     assert out["PARACETAMOL 500MG TAB"].match_reason == "exact"
     assert out["TRULY UNKNOWN"].match_reason == "no_candidates"
+
+
+def test_fda_food_fallback_evaluates_validate_once(spark, dims, fda_food):
+    """The food fallback reads the tagged relation once: its lookups run
+    on the distinct texts, so the F33 validate crossing appears once in
+    the optimized plan, as it does without the food dim."""
+    esoa = spark.createDataFrame(
+        [("ENERGY BISCUIT",), ("CHOCO KOOLAID DRINK",), ("PARACETAMOL 500MG TAB",)],
+        "raw_text string",
+    )
+
+    def n_validate(tagged):
+        return tagged._jdf.queryExecution().optimizedPlan().toString().count("_validate(")
+
+    assert n_validate(tag_descriptions(esoa, **dims)) == 1
+    assert n_validate(tag_descriptions(esoa, **dims, fda_food_dim=fda_food)) == 1
 
 
 # ---------------------------------------------------------------------------
@@ -694,3 +714,62 @@ def test_failing_build_unpersists_its_intermediates(spark, dims, monkeypatch):
         tag_descriptions(esoa, **dims)
     assert seen
     assert all(not df.storageLevel.useMemory and not df.storageLevel.useDisk for df in seen)
+
+
+def test_tagging_is_batch_independent(spark, dims):
+    """A text's tagged row depends only on the text and the dims, not on
+    which other texts share its call: Annex-shaped and eSOA-shaped texts
+    tagged each alone and both in one call give equal rows in every
+    column. run_drugs_all tags both relations in one call on this
+    ground."""
+    from pyspark.sql import functions as F
+
+    shared = "PARACETAMOL 500MG TAB"
+    annex = [
+        shared,
+        "PARACETAMOL 500 mg TABLET",
+        "AMOXICILLIN + CLAVULANIC ACID 625 mg TABLET",  # combination
+        "SALBUTAMOL 2 mg/5 mL SYRUP",
+        "AMLODIPINE 5 mg TABLET",
+        "AMLODIPINE 5 mg TABLET",  # duplicate
+        "",
+        None,
+    ]
+    esoa = [
+        shared,
+        "BIOGESIC 500 MG TABLET",  # brand hit
+        "PARACETMOL 500MG TAB",  # typo → fuzzy tier
+        "ACETAMINOPHEN 250MG SYRUP",
+        "AMOXICILLIN + CLAVULANIC ACID 625MG TAB",
+        "SODIUM CHLORIDE 0.9% SOLUTION",
+        "COMPLETELY UNKNOWN COMPOUND 10MG",
+        "BIOGESIC 500 MG TABLET",  # duplicate
+        "   ",
+        None,
+    ]
+
+    def frame(texts, col):
+        return spark.createDataFrame([(t,) for t in texts], f"{col} string")
+
+    def by_text(tagged):
+        rows = tagged.collect()
+        out = {r.raw_text: r.asDict() for r in rows}
+        assert len(out) == len(rows)
+        return out
+
+    annex_df = frame(annex, "drug_description")
+    esoa_df = frame(esoa, "raw_text")
+    annex_alone = by_text(tag_descriptions(annex_df, **dims, text_col="drug_description"))
+    esoa_alone = by_text(tag_descriptions(esoa_df, **dims))
+    both = by_text(tag_descriptions(
+        annex_df.select(F.col("drug_description").alias("raw_text")).unionByName(esoa_df),
+        **dims,
+    ))
+    assert set(both) == {t for t in annex + esoa if t and t.strip()}
+    assert set(both) == set(annex_alone) | set(esoa_alone)
+    for alone in (annex_alone, esoa_alone):
+        assert {t: both[t] for t in alone} == alone
+    # the texts reach the tiers they were chosen for
+    assert both["BIOGESIC 500 MG TABLET"]["generic_name"] == "PARACETAMOL"
+    assert both["PARACETMOL 500MG TAB"]["match_reason"] == "fuzzy"
+    assert both["AMOXICILLIN + CLAVULANIC ACID 625MG TAB"]["match_reason"] == "combination_key"
