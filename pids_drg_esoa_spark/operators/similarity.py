@@ -5,13 +5,13 @@ Scoring is an integer dot product over vectors quantized to 1e-4
 to cosine, and integer arithmetic is bit-exact across engines and
 across partition orders (a float dot's accumulation order is not).
 
-- brute-force top-k: the correctness baseline; fact×queries
-  broadcast nested-loop, fine when |queries| is small.
-- IVF/LSH-bucketed top-k: sign-bit coarse quantization (8 planes →
-  256 cells); probes only the query's cell. The 100 TB path: the
-  bucket key is an equi-join key, so candidate generation shuffles
-  O(n), never O(n²). Recall < 1 by design — documented tradeoff.
-- near-dup pairs: label-blocked pair scan with a dot threshold.
+- brute-force top-k: the exactness oracle; fact×queries broadcast
+  nested-loop, fine when |queries| is small.
+- IVF top-k over trained k-means cells: the scale path. The cell id
+  is an equi-join key, so candidate generation shuffles O(n), never
+  O(n²). Recall < 1 by design, measured against the brute force.
+- near-dup pairs: label-blocked pair scan with a dot threshold, and
+  its (label, sign-cell) blocked form for scale.
 """
 
 from __future__ import annotations
@@ -58,8 +58,9 @@ _SQL_DOT = (
 
 def _topk(scored: DataFrame, k: int) -> DataFrame:
     """Per-query top-k with the oracle-pinned tie-break (dot DESC,
-    neighbor_id ASC) — ONE definition for all three ANN variants so
-    the correctness-critical ordering cannot drift between them."""
+    neighbor_id ASC) — ONE definition for the brute-force and IVF
+    queries so the correctness-critical ordering cannot drift between
+    them."""
     w = W.partitionBy("query_id").orderBy(F.desc("dot_q"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -89,7 +90,12 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force top-k by quantized dot product (= cosine on these
     unit-norm vectors): broadcast the small query set against the
-    full collection, window top-k with id tie-break."""
+    full collection (a broadcast nested-loop join), window top-k with
+    id tie-break. This is the exactness oracle, not the scale path: it
+    scores every (query, vector) pair, so it is exact by construction
+    and the IVF queries' recall reports are measured against it. The
+    scale path is the trained k-means IVF (``ann_ivf_kmeans_topk``,
+    ``ann_ivf_kmeans_multiprobe``)."""
     v = table(spark, sf_dir, "embeddings").select("vec_id", quantize(F.col("embedding")).alias("qe"))
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("qe").alias("q_emb")
@@ -103,141 +109,6 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return _topk(scored, TOP_K)
-
-
-@register(
-    "ann_ivf_bucketed_topk",
-    oracle=f"""
-    WITH v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-               {" || ".join(f"(CASE WHEN embedding[{i + 1}] >= 0 THEN '1' ELSE '0' END)" for i in range(8))} AS cell
-        FROM embeddings
-    ),
-    q AS (SELECT * FROM v WHERE vec_id < {N_QUERIES}),
-    scored AS (
-        SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id, {_SQL_DOT.replace("a.e", "q.e")} AS dot_q
-        FROM q JOIN v b ON q.cell = b.cell AND b.vec_id <> q.vec_id
-    )
-    SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rank, dot_q
-    FROM (
-        SELECT query_id, neighbor_id, dot_q,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY dot_q DESC, neighbor_id ASC) AS rnk
-        FROM scored
-    ) WHERE rnk <= 3
-    """,
-)
-def ann_ivf_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style bucketed ANN: sign-bit coarse cells (8 planes → 256),
-    probe only the query's cell, top-3 within it. Candidate
-    generation becomes an equi-join on the cell key — the scalable
-    shape; recall is traded for the O(n) shuffle."""
-    e = table(spark, sf_dir, "embeddings")
-    v = e.select(
-        "vec_id",
-        quantize(F.col("embedding")).alias("qe"),
-        sign_bucket(F.col("embedding")).alias("cell"),
-    )
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("qe").alias("q_emb"), "cell"
-    )
-    scored = (
-        v.join(F.broadcast(q), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            int_dot(F.col("q_emb"), F.col("qe")).alias("dot_q"),
-        )
-    )
-    return _topk(scored, 3)
-
-
-def hamming1_cells(cell: Column, n_planes: int = 8) -> Column:
-    """The query's sign cell plus its ``n_planes`` hamming-1
-    neighbors — classic LSH multi-probe (Lv et al. 2007): a near
-    neighbor that disagrees on exactly one sign bit (a dimension near
-    zero) lives in a hamming-1 cell, so probing those 9 of 2^8 cells
-    (~3.5%) recovers most boundary misses at bounded cost."""
-    cells = [cell]
-    for i in range(1, n_planes + 1):
-        flipped = F.when(F.substring(cell, i, 1) == "1", F.lit("0")).otherwise(F.lit("1"))
-        cells.append(
-            F.concat(
-                F.substring(cell, 1, i - 1), flipped, F.substring(cell, i + 1, n_planes)
-            )
-        )
-    return F.array(*cells)
-
-
-_SQL_HAMMING1 = f"""
-    pc AS (
-        SELECT vec_id, cell FROM q
-        UNION ALL
-        SELECT q.vec_id,
-               substr(q.cell, 1, t.i - 1)
-               || (CASE WHEN substr(q.cell, t.i, 1) = '1' THEN '0' ELSE '1' END)
-               || substr(q.cell, t.i + 1) AS cell
-        FROM q, (SELECT unnest(generate_series(1, 8)) AS i) t
-    )
-"""
-
-
-@register(
-    "ann_ivf_bucketed_multiprobe",
-    oracle=f"""
-    WITH v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-               {" || ".join(f"(CASE WHEN embedding[{i + 1}] >= 0 THEN '1' ELSE '0' END)" for i in range(8))} AS cell
-        FROM embeddings
-    ),
-    q AS (SELECT * FROM v WHERE vec_id < {N_QUERIES}),
-    {_SQL_HAMMING1},
-    scored AS (
-        SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id, {_SQL_DOT.replace("a.e", "q.e")} AS dot_q
-        FROM pc
-        JOIN q ON q.vec_id = pc.vec_id
-        JOIN v b ON b.cell = pc.cell AND b.vec_id <> q.vec_id
-    )
-    SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rank, dot_q
-    FROM (
-        SELECT query_id, neighbor_id, dot_q,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY dot_q DESC, neighbor_id ASC) AS rnk
-        FROM scored
-    ) WHERE rnk <= 3
-    """,
-)
-def ann_ivf_bucketed_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-bucket IVF with hamming-1 multi-probe: each query probes
-    its own cell plus the 8 one-bit-flip cells — the standard LSH
-    multi-probe shape, complementing the trained-centroid multi-probe
-    (`ann_ivf_kmeans_multiprobe`). Probed cells are disjoint vector
-    sets, so candidate generation stays a dedup-free equi-join on the
-    cell key at 9/256 of the collection per query; measured recall@3
-    vs brute force is in SCALE.md."""
-    e = table(spark, sf_dir, "embeddings")
-    v = e.select(
-        "vec_id",
-        quantize(F.col("embedding")).alias("qe"),
-        sign_bucket(F.col("embedding")).alias("cell"),
-    )
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("qe").alias("q_emb"), "cell"
-    )
-    probed = q.select(
-        "query_id", "q_emb", F.explode(hamming1_cells(F.col("cell"))).alias("cell")
-    )
-    scored = (
-        v.join(F.broadcast(probed), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            int_dot(F.col("q_emb"), F.col("qe")).alias("dot_q"),
-        )
-    )
-    return _topk(scored, 3)
 
 
 K_MEANS_K = 8
@@ -528,12 +399,13 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with TRAINED coarse centroids: deterministic integer
     k-means (k=8, one Lloyd round — init from the first k vectors,
     sum/count statistics, floor-division centroid update), then probe
-    only the query's cell, top-3 by quantized dot. Upgrades the
-    sign-bit cells of ``ann_ivf_bucketed_topk``: data-adaptive cells
-    give balanced partitions on clustered embeddings (sign-bit cells
-    collapse when mass concentrates in an orthant), while candidate
-    generation stays an equi-join on the cell id — the O(n)-shuffle
-    IVF shape used at 100 TB, with training cost O(iters · scan)."""
+    only the query's cell, top-3 by quantized dot. This is the scale
+    path; ``ann_cosine_topk`` is the exactness oracle its recall is
+    measured against (``ann_ivf_recall_report``). Trained cells adapt
+    to the data, so they stay balanced on clustered embeddings, and
+    candidate generation is an equi-join on the cell id — the
+    O(n)-shuffle IVF shape used at 100 TB, with training cost
+    O(iters · scan)."""
     return _ivf_kmeans_topk(spark, sf_dir, nprobe=1)
 
 

@@ -51,6 +51,11 @@ class BasePipeline:
         ctx: PipelineContext,
         timing_hook: Callable[[str, float], None] | None = None,
     ) -> PipelineContext:
+        """Run the four stages in order. ``timing_hook(name, seconds)``
+        gets each stage's driver wall time. The stages mostly build lazy
+        plans (a dim may be materialized on the way), and the artifacts
+        execute only when the caller writes or collects them, so these
+        are plan-construction seconds, not execution times."""
         for stage in (self.pre_run, self.prepare_inputs, self.match, self.post_run):
             t0 = time.time()
             stage(ctx)

@@ -548,7 +548,12 @@ class DrugsPipeline(BasePipeline):
     item_ref_code = "DrugsAndMedicine"
 
     def prepare_inputs(self, ctx: PipelineContext) -> None:
-        ctx.artifacts["pnf_prepared"] = prepare_pnf(ctx.inputs["pnf"])
+        from ..plans.tagger import _materialize_dim
+
+        # parse the PNF once, as runner.run_drugs_all does: both
+        # builders below read it, and a lazy plan would re-run its
+        # pandas UDFs in each branch
+        ctx.artifacts["pnf_prepared"] = _materialize_dim(prepare_pnf(ctx.inputs["pnf"]))
         ctx.artifacts["unified_generics"] = build_unified_generics(
             ctx.inputs["drugbank_generics"], ctx.inputs["who_atc"],
             ctx.artifacts["pnf_prepared"],

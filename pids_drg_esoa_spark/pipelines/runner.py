@@ -8,20 +8,21 @@ coverage metrics (metrics_history) and writes run_summary.md sections
 
 Execution shape. Part 1 parses the PNF once into a leaf, builds the four
 unified dims from it and materializes them with the synonym and food
-dims (parquet or bucketed-table copies are optional: pass
-``checkpoint_dir`` or ``bucketed_dims``). Parts 2 and 3 tag against the
-same dims, and a text's tagged row depends only on the text and the
-dims, so ONE ``tag_descriptions`` call tags the union of the Annex
-descriptions and the eSOA texts, without the food dim, and ends at an
-eager ``localCheckpoint`` leaf. Parts 2 and 3 then run concurrently in
-two driver threads: each joins its input rows back to that leaf (Part 3
-applies the food fallback, ``apply_fda_food``, to its side only), ends
-at an eager leaf of its own and materializes the side Part 4 reads from
-it: the Annex candidate index, or the eSOA bridge side. Part 4 bridges
-the two sides and ends at a leaf too. The three summary aggregations
-(Part 2 stats, Part 3 stats, Part 4 reasons) run concurrently over
-those leaves. Each Part's plan is therefore built over leaves, never
-over an earlier Part's derivation.
+dims (a parquet copy is optional: pass ``checkpoint_dir``). Parts 2
+and 3 tag against the same dims, and a text's tagged row depends only
+on the text and the dims, so ONE ``tag_descriptions`` call tags the
+union of the Annex descriptions and the eSOA texts, without the food
+dim, and ends at an eager ``localCheckpoint`` leaf; the tagger's
+persisted intermediates are released once that leaf exists. Parts 2
+and 3 then run concurrently in two driver threads: each joins its input
+rows back to that leaf (Part 3 applies the food fallback,
+``apply_fda_food``, to its side only), ends at an eager leaf of its own
+and materializes the side Part 4 reads from it: the Annex candidate
+index, or the eSOA bridge side. Part 4 bridges the two sides and ends
+at a leaf too. The three summary aggregations (Part 2 stats, Part 3
+stats, Part 4 reasons) run concurrently over those leaves. Each Part's
+plan is therefore built over leaves, never over an earlier Part's
+derivation.
 """
 
 from __future__ import annotations
@@ -127,22 +128,11 @@ def run_drugs_all(
     inputs: dict[str, DataFrame],
     metrics_path: str | None = None,
     checkpoint_dir: str | None = None,
-    bucketed_dims: bool = False,
 ) -> RunResult:
     """Parts 1-4. ``inputs`` carries the reference-shaped tables:
     pnf, drugbank_generics, drugbank_atc, drugbank_brands, fda_brands,
     who_atc, mixtures, annex_f (drug_code, drug_description), esoa
-    (raw_text).
-
-    ``bucketed_dims=True`` persists the Part-1 unified dims as
-    bucketed+sorted catalog tables on their join keys
-    (sources/writers.write_bucketed_table — SCALE.md lesson #3's
-    cluster-scale form) and reads them back from the catalog: when a
-    dim outgrows the broadcast threshold (a full DrugBank unified
-    build), every downstream equi-join on the bucket key reads
-    co-located pre-sorted buckets with NO dim-side Exchange
-    (plan property pinned by tests/test_runner_cli.py::
-    test_bucketed_dims_layout)."""
+    (raw_text)."""
     # ---- Part 1: unified reference ------------------------------------
     # Parse the PNF once: every branch that reads pnf_prepared (the
     # generics spine, its anti-joins and pnf_raw leg, the ATC build)
@@ -162,21 +152,7 @@ def run_drugs_all(
     mixtures = build_unified_mixtures(inputs["mixtures"]).selectExpr(
         "component_key", "mixture_name", "drugbank_id"
     )
-    if bucketed_dims:
-        from ..sources.writers import write_bucketed_table
-
-        for name, df, key in [
-            ("unified_generics", generics, "generic_name"),
-            ("unified_atc", atc, "generic_name"),
-            ("unified_brands", brands, "brand_name"),
-            ("unified_mixtures", mixtures, "component_key"),
-        ]:
-            write_bucketed_table(df, name, (key,))
-        generics = spark.table("unified_generics")
-        atc = spark.table("unified_atc")
-        brands = spark.table("unified_brands")
-        mixtures = spark.table("unified_mixtures")
-    elif checkpoint_dir:
+    if checkpoint_dir:
         for name, df in [("unified_generics", generics), ("unified_atc", atc),
                          ("unified_brands", brands), ("unified_mixtures", mixtures)]:
             path = os.path.join(checkpoint_dir, name)
@@ -250,12 +226,18 @@ def run_drugs_all(
     annex_src = inputs["annex_f"].withColumn(
         "annex_order", F.monotonically_increasing_id()
     )
-    tagged = tag_descriptions(
+    tag_plan = tag_descriptions(
         annex_src.select(F.col("drug_description").alias("raw_text"))
         .unionByName(inputs["esoa"].select("raw_text")),
         generics_dim=generics, atc_dim=atc, brands_dim=brands,
         mixtures_dim=mixtures, synonyms_dim=synonyms,
-    ).localCheckpoint(eager=True)
+    )
+    tagged = tag_plan.localCheckpoint(eager=True)
+    # The leaf holds the tagged rows, so nothing reads the tagger's
+    # persisted intermediates any more; left cached they would outlive
+    # the run for the rest of the session.
+    for r in tag_plan.persisted_intermediates:
+        r.unpersist()
 
     # Each Part joins its input rows back to the leaf in its own driver
     # thread, ends at an eager localCheckpoint leaf (its output is

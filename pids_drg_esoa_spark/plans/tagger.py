@@ -848,11 +848,11 @@ def _materialize_dim(dim: DataFrame | None) -> DataFrame | None:
     if dim is None:
         return None
     try:
-        # Leafness is judged on the OPTIMIZED plan: a catalog-table
-        # read analyzes as SubqueryAlias(Relation) (one child) but
-        # optimizes to the bare relation — checkpointing it would
-        # discard the bucketed layout runner.run_drugs_all(
-        # bucketed_dims=True) just paid for.
+        # Leafness is judged on the OPTIMIZED plan, where a scan is a
+        # bare relation (a catalog-table read analyzes with a
+        # SubqueryAlias on top). A scan, such as the parquet copies
+        # runner.run_drugs_all(checkpoint_dir=...) reads back, is
+        # already a leaf: a checkpoint would only copy it.
         plan = dim._jdf.queryExecution().optimizedPlan()
         if plan.children().size() == 0:  # already a leaf relation
             return dim

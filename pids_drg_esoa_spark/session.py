@@ -67,8 +67,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # saveAsTable target for bucketed dim tables (S5-at-scale);
-        # tmp by default so the repo tree never collects a warehouse
+        # warehouse for catalog tables; tmp by default so the repo
+        # tree never collects one
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(

@@ -24,41 +24,6 @@ def write_parquet(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) 
     w.parquet(path)
 
 
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: tuple[str, ...],
-    n_buckets: int = 16,
-    sort_cols: tuple[str, ...] | None = None,
-    mode: str = "overwrite",
-) -> str:
-    """S5-at-scale (SCALE.md gap #1): persist a dim bucketed+sorted on
-    its join key so every later join on that key reads co-located,
-    pre-sorted buckets — no probe-side Exchange, no per-run sort. The
-    reference rebuilds DuckDB indexes per run (tagger.py:169,202);
-    bucketing is the durable Spark equivalent. Requires saveAsTable
-    (bucket metadata lives in the catalog, not the parquet footer);
-    the session warehouse dir is tmp-scoped by default (session.py).
-    No-probe-exchange property pinned by
-    tests/test_sources_io.py::test_bucketed_join_skips_exchange.
-
-    Crash-safe overwrite: a run killed mid-session leaves the table's
-    warehouse location behind while a fresh in-memory catalog forgets
-    the table, and saveAsTable then refuses the orphaned location
-    (LOCATION_ALREADY_EXISTS). An overwrite of a table the catalog
-    does not know clears that location first."""
-    spark = df.sparkSession
-    if mode == "overwrite" and not spark.catalog.tableExists(table_name):
-        catalog = spark._jsparkSession.sessionState().catalog()
-        ident = spark._jsparkSession.sessionState().sqlParser().parseTableIdentifier(table_name)
-        location = spark._jvm.org.apache.hadoop.fs.Path(catalog.defaultTablePath(ident))
-        location.getFileSystem(spark._jsc.hadoopConfiguration()).delete(location, True)
-    w = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    w = w.sortBy(*(sort_cols or bucket_cols))
-    w.format("parquet").saveAsTable(table_name)
-    return table_name
-
-
 def append_metrics(spark: SparkSession, path: str, metrics: dict[str, float | int | str]) -> None:
     """S8: append one stamped metrics row. Append-mode Parquet — each
     run adds a file; readers see the union (the reference's

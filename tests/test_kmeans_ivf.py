@@ -174,22 +174,6 @@ def test_multiprobe_recall_monotone_in_nprobe(spark, sf_dir):
     assert hits[2] > 0
 
 
-def test_hamming1_cells_shape(spark):
-    """9 probe cells: the original + 8 single-bit flips, all distinct,
-    each at hamming distance exactly 0 or 1."""
-    from pids_drg_esoa_spark.operators.similarity import hamming1_cells
-
-    df = spark.createDataFrame([("10110010",)], "cell string")
-    (row,) = df.select(hamming1_cells(F.col("cell")).alias("cells")).collect()
-    cells = list(row["cells"])
-    assert len(cells) == 9 and len(set(cells)) == 9
-    orig = cells[0]
-    assert orig == "10110010"
-    for c in cells[1:]:
-        assert len(c) == 8
-        assert sum(a != b for a, b in zip(orig, c)) == 1
-
-
 def test_ivf_k_policy():
     """Corpus-derived k (r8): reproduces the measured k=40 sweet spot
     at the n=500 oracle corpus (so the static oracle SQL keeps gating

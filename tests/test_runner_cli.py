@@ -130,44 +130,6 @@ def test_cli_end_to_end(spark, tmp_path, flow_inputs):
     assert row.match_source == "labs_master"
 
 
-def test_bucketed_dims_layout(spark, flow_inputs):
-    """VERDICT r5 #5: ``bucketed_dims=True`` persists the Part-1 dims
-    as bucketed catalog tables and the flow reads them back — same
-    match decisions as the in-memory run, and an equi-join on the
-    bucket key scans the bucketed layout with NO dim-side Exchange
-    (the cluster-scale path for dims too big to broadcast)."""
-    try:
-        res = run_drugs_all(spark, flow_inputs, bucketed_dims=True)
-        bridged = {r.raw_text: r for r in res.esoa_with_drug_code.collect()}
-        assert bridged["PARACETAMOL 500MG TAB"].drug_code == "D001"
-        assert bridged["BIOGESIC 500 MG TABLET"].drug_code == "D001"
-        assert res.coverage["esoa_drug_code"] == 3
-
-        # the dims landed as bucketed catalog tables
-        desc = spark.sql("DESCRIBE EXTENDED unified_generics").collect()
-        desc_map = {r.col_name: r.data_type for r in desc}
-        assert desc_map.get("Num Buckets") == "16", desc_map
-
-        # and a key-equi-join against the bucketed dim needs no
-        # dim-side shuffle: exactly ONE Exchange (probe side only)
-        probe = spark.createDataFrame(
-            [("PARACETAMOL",), ("AMOXICILLIN",)], "generic_name string"
-        )
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            joined = probe.join(spark.table("unified_generics"), "generic_name")
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "Bucketed: true" in plan, plan
-            assert plan.count("Exchange") == 1, plan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        for t in ("unified_generics", "unified_atc", "unified_brands",
-                  "unified_mixtures"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
 def test_reference_shaped_synonyms_input(spark, flow_inputs):
     """The runner accepts the reference's unified_synonyms shape
     (pipe-joined synonyms column, build_unified_reference.py:296-306)
@@ -305,6 +267,29 @@ def test_concurrent_runner_matches_sequential_flow(spark, flow_inputs, monkeypat
             if r.match_reason is not None
         },
     }
+
+
+def test_run_releases_the_tagger_intermediates(spark, flow_inputs, monkeypatch):
+    """run_drugs_all reads the tag pass through its eager leaf, so once
+    it returns none of the tagger's persisted intermediates is still
+    cached: repeated runs in one session do not pile them up."""
+    from pids_drg_esoa_spark.pipelines import runner
+
+    calls = []
+
+    def spy(*args, _real=runner.tag_descriptions, **kwargs):
+        calls.append(_real(*args, **kwargs))
+        return calls[-1]
+
+    monkeypatch.setattr(runner, "tag_descriptions", spy)
+    runner.run_drugs_all(spark, flow_inputs)
+    (tagged,) = calls
+    assert tagged.persisted_intermediates
+    still_cached = [
+        df for df in tagged.persisted_intermediates
+        if df.storageLevel.useMemory or df.storageLevel.useDisk
+    ]
+    assert still_cached == []
 
 
 def test_run_jobs_carry_the_callers_job_group(spark, flow_inputs):

@@ -83,53 +83,6 @@ def test_write_parquet_partitioned(spark, tmp_path):
     assert spark.read.parquet(out).count() == 2
 
 
-def test_bucketed_join_skips_exchange(spark):
-    """SCALE.md gap #1 closed: two tables bucketed+sorted on the join
-    key sort-merge-join with NO Exchange (shuffle) on either side —
-    the plan property that makes repeated tagger joins across runs
-    co-located. Broadcast disabled to force the merge-join path."""
-    from pids_drg_esoa_spark.sources.writers import write_bucketed_table
-
-    a = spark.range(0, 1000).selectExpr("id AS k", "id * 2 AS va")
-    b = spark.range(0, 1000).selectExpr("id AS k", "id * 3 AS vb")
-    write_bucketed_table(a, "bkt_a", ("k",), n_buckets=8)
-    write_bucketed_table(b, "bkt_b", ("k",), n_buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
-
-
-def test_bucketed_overwrite_clears_orphaned_location(spark):
-    """A killed run leaves the table's warehouse location behind while a
-    fresh catalog forgets the table; the overwrite must still succeed
-    instead of failing with LOCATION_ALREADY_EXISTS."""
-    from urllib.parse import urlparse
-
-    from pids_drg_esoa_spark.sources.writers import write_bucketed_table
-
-    spark.sql("DROP TABLE IF EXISTS bkt_orphan")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    orphan = os.path.join(urlparse(warehouse).path or warehouse, "bkt_orphan")
-    os.makedirs(orphan, exist_ok=True)
-    with open(os.path.join(orphan, "part-00000-stale.parquet"), "w") as f:
-        f.write("left by a killed run")
-    try:
-        write_bucketed_table(
-            spark.range(10).selectExpr("id AS k"), "bkt_orphan", ("k",), n_buckets=2
-        )
-        assert spark.table("bkt_orphan").count() == 10
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_orphan")
-
-
 def test_read_jsonl_permissive_and_failfast(spark, tmp_path):
     """JSONL scan: explicit schema, malformed lines quarantined into
     _corrupt_record under PERMISSIVE; FAILFAST raises."""

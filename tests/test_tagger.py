@@ -773,3 +773,17 @@ def test_tagging_is_batch_independent(spark, dims):
     assert both["BIOGESIC 500 MG TABLET"]["generic_name"] == "PARACETAMOL"
     assert both["PARACETMOL 500MG TAB"]["match_reason"] == "fuzzy"
     assert both["AMOXICILLIN + CLAVULANIC ACID 625MG TAB"]["match_reason"] == "combination_key"
+
+
+def test_materialize_dim_passes_scans_through(spark, tmp_path):
+    """A dim that is already a scan (the parquet copies
+    run_drugs_all(checkpoint_dir=...) reads back) is a leaf: it is
+    returned as is, with no checkpoint job."""
+    from pids_drg_esoa_spark.plans.tagger import _materialize_dim
+
+    path = str(tmp_path / "dim")
+    spark.createDataFrame([("PARACETAMOL",)], "generic_name string").write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert _materialize_dim(scan) is scan
+    derived = scan.withColumn("n", scan.generic_name.substr(1, 3))
+    assert _materialize_dim(derived) is not derived
