@@ -17,17 +17,31 @@ from pyspark.sql.functions import col as F_col
 
 from .pipelines.base import PipelineContext, get_pipeline, slugify_item_ref_code
 from .session import get_spark
-from .sources.readers import read_table_prefer_parquet
+from .sources.readers import read_table_prefer_parquet, with_input_position
 from .sources.writers import write_parquet
 
 # input table stems each pipeline expects under <inputs-dir>/<slug>/
+DRUGS_REFERENCE = (  # the tables Part 1 builds the unified reference from
+    "pnf", "drugbank_generics", "drugbank_atc", "drugbank_brands",
+    "fda_brands", "who_atc", "mixtures",
+)
 PIPELINE_INPUTS: dict[str, tuple[str, ...]] = {
-    "DrugsAndMedicine": (
-        "esoa", "pnf", "drugbank_generics", "drugbank_atc", "drugbank_brands",
-        "fda_brands", "who_atc", "mixtures",
-    ),
+    "DrugsAndMedicine": ("esoa", *DRUGS_REFERENCE),
     "LaboratoryAndDiagnostic": ("esoa", "labs_master", "diagnostics"),
 }
+# read when present: synonyms feed the drugs Part 1, fda_food its Part 3
+OPTIONAL_INPUTS = ("synonyms", "fda_food")
+
+
+def read_inputs(spark, directory: str, stems: tuple[str, ...]) -> dict:
+    """<stem>.parquet, else <stem>.csv, under ``directory`` for each
+    stem, plus each ``OPTIONAL_INPUTS`` stem whose file exists."""
+    present = [stem for stem in OPTIONAL_INPUTS if any(
+        os.path.exists(os.path.join(directory, stem + ext)) for ext in (".parquet", ".csv"))]
+    return {
+        stem: read_table_prefer_parquet(spark, os.path.join(directory, stem))
+        for stem in (*stems, *present)
+    }
 
 
 # curation artifacts the `curate` subcommand can emit; each is an
@@ -115,11 +129,6 @@ def drugs_all_main(argv: list[str]) -> int:
     parquet plus run_summary.md and the append-only metrics history."""
     from .pipelines.runner import run_drugs_all
 
-    stems = (
-        "pnf", "drugbank_generics", "drugbank_atc", "drugbank_brands",
-        "fda_brands", "who_atc", "mixtures", "annex_f", "esoa",
-    )
-    optional = ("synonyms", "fda_food")
     ap = argparse.ArgumentParser(prog="drugs-all", description=drugs_all_main.__doc__)
     ap.add_argument("--inputs-dir", required=True)
     ap.add_argument("--output-dir", required=True)
@@ -128,14 +137,7 @@ def drugs_all_main(argv: list[str]) -> int:
     args = ap.parse_args(argv)
 
     spark = get_spark(app_name="pids-drg-esoa-drugs-all", cpus=args.cpus)
-    inputs = {
-        stem: read_table_prefer_parquet(spark, os.path.join(args.inputs_dir, stem))
-        for stem in stems
-    }
-    for stem in optional:
-        base = os.path.join(args.inputs_dir, stem)
-        if os.path.exists(base + ".parquet") or os.path.exists(base + ".csv"):
-            inputs[stem] = read_table_prefer_parquet(spark, base)
+    inputs = read_inputs(spark, args.inputs_dir, (*DRUGS_REFERENCE, "annex_f", "esoa"))
     res = run_drugs_all(
         spark, inputs,
         metrics_path=os.path.join(args.output_dir, "metrics_history"),
@@ -182,24 +184,15 @@ def main(argv: list[str] | None = None) -> int:
 
     slug = slugify_item_ref_code(args.item_ref_code)
     spark = get_spark(app_name=f"pids-drg-esoa-{slug}", cpus=args.cpus)
-    base = os.path.join(args.inputs_dir, slug)
-    inputs = {
-        stem: read_table_prefer_parquet(spark, os.path.join(base, stem))
-        for stem in PIPELINE_INPUTS[args.item_ref_code]
-    }
+    inputs = read_inputs(
+        spark, os.path.join(args.inputs_dir, slug), PIPELINE_INPUTS[args.item_ref_code]
+    )
     # labs catalogs: the reference's setdefault lookup keeps the first
     # FILE ROW per normalized key (match_labs.py:29-36), so the dims
-    # carry their file position into _first_wins. They are small
-    # single-file dims — coalesce(1) makes monotonically_increasing_id
-    # the exact file order (labs fuzz, r10).
-    from pyspark.sql import functions as F
-
+    # carry their file position into _first_wins (labs fuzz, r10).
     for stem in ("labs_master", "diagnostics"):
         if stem in inputs and "_row_order" not in inputs[stem].columns:
-            inputs[stem] = (
-                inputs[stem].coalesce(1)
-                .withColumn("_row_order", F.monotonically_increasing_id())
-            )
+            inputs[stem] = with_input_position(inputs[stem], "_row_order")
     pipe = get_pipeline(args.item_ref_code)
     ctx = PipelineContext(spark=spark, inputs=inputs)
     timings: dict[str, float] = {}

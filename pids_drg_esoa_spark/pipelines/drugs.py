@@ -9,6 +9,8 @@ Reference lifecycle (SURVEY §3.2, run_drugs_all.py):
 - Part 2/3: tag Annex F / eSOA descriptions (plans.tagger).
 - Part 4: bridge tagged eSOA rows to Annex F drug codes (plans.bridge).
 
+``pipelines.runner.build_reference`` composes the builders into Part 1.
+
 Everything here is a declarative transform on DataFrames; dims are
 small (≪10 MB) and broadcast at use sites. The order-dependent bits
 of the reference (keep='first' dedupes) carry explicit orderings.
@@ -543,49 +545,34 @@ def prepare_pnf(pnf_raw: DataFrame) -> DataFrame:
 
 @register_pipeline
 class DrugsPipeline(BasePipeline):
-    """ITEM_REF_CODE dispatcher entry for drugs (SURVEY §3.1)."""
+    """ITEM_REF_CODE dispatcher entry for drugs (SURVEY §3.1): the
+    chain's Part 1 and Part 3 (``pipelines.runner.build_reference`` and
+    ``merge_tagged``) on the eSOA rows, without the Annex F Parts."""
 
     item_ref_code = "DrugsAndMedicine"
 
     def prepare_inputs(self, ctx: PipelineContext) -> None:
-        from ..plans.tagger import _materialize_dim
+        from .runner import build_reference
 
-        # parse the PNF once, as runner.run_drugs_all does: both
-        # builders below read it, and a lazy plan would re-run its
-        # pandas UDFs in each branch
-        ctx.artifacts["pnf_prepared"] = _materialize_dim(prepare_pnf(ctx.inputs["pnf"]))
-        ctx.artifacts["unified_generics"] = build_unified_generics(
-            ctx.inputs["drugbank_generics"], ctx.inputs["who_atc"],
-            ctx.artifacts["pnf_prepared"],
+        pnf_prepared, dims = build_reference(ctx.spark, ctx.inputs)
+        ctx.artifacts.update(
+            pnf_prepared=pnf_prepared,
+            unified_generics=dims["generics_dim"],
+            unified_atc=dims["atc_dim"],
+            unified_brands=dims["brands_dim"],
+            unified_mixtures=dims["mixtures_dim"],
         )
-        # pnf_prepared feeds the ATC build here exactly as in
-        # runner.run_drugs_all — omitting it dropped every PNF-only
-        # ATC row from this entry point while the runner kept them
-        ctx.artifacts["unified_atc"] = build_unified_atc(
-            ctx.inputs["drugbank_atc"], ctx.inputs["who_atc"],
-            ctx.artifacts["pnf_prepared"],
-            drugbank_generics=ctx.inputs["drugbank_generics"],
-        )
-        ctx.artifacts["unified_brands"] = build_unified_brands(
-            ctx.inputs["fda_brands"], ctx.inputs["drugbank_brands"],
-            drugbank_generics=ctx.inputs["drugbank_generics"],
-        )
-        ctx.artifacts["unified_mixtures"] = build_unified_mixtures(ctx.inputs["mixtures"])
+        ctx.params["reference_dims"] = dims
 
     def match(self, ctx: PipelineContext) -> None:
         from ..plans.tagger import tag_descriptions
-        from .runner import flag_combination_atc
+        from .runner import merge_tagged
 
-        atc_flagged = flag_combination_atc(ctx.artifacts["unified_atc"])
-        ctx.artifacts["esoa_with_atc"] = tag_descriptions(
-            ctx.inputs["esoa"],
-            generics_dim=ctx.artifacts["unified_generics"],
-            atc_dim=atc_flagged,
-            brands_dim=ctx.artifacts["unified_brands"],
-            mixtures_dim=ctx.artifacts["unified_mixtures"].selectExpr(
-                "component_key", "mixture_name", "drugbank_id"
-            ),
-            text_col="raw_text",
+        dims = dict(ctx.params["reference_dims"])
+        fda_food = dims.pop("fda_food_dim")
+        esoa = ctx.inputs["esoa"]
+        ctx.artifacts["esoa_with_atc"] = merge_tagged(
+            esoa, tag_descriptions(esoa.select("raw_text"), **dims), fda_food_dim=fda_food
         )
 
     def post_run(self, ctx: PipelineContext) -> None:

@@ -6,23 +6,25 @@ Part 1 build unified reference → Part 2 tag Annex F → Part 3 tag eSOA
 coverage metrics (metrics_history) and writes run_summary.md sections
 (run_drugs_all.py:52-117,702-783).
 
-Execution shape. Part 1 parses the PNF once into a leaf, builds the four
-unified dims from it and materializes them with the synonym and food
-dims (a parquet copy is optional: pass ``checkpoint_dir``). Parts 2
-and 3 tag against the same dims, and a text's tagged row depends only
-on the text and the dims, so ONE ``tag_descriptions`` call tags the
-union of the Annex descriptions and the eSOA texts, without the food
-dim, and ends at an eager ``localCheckpoint`` leaf; the tagger's
-persisted intermediates are released once that leaf exists. Parts 2
-and 3 then run concurrently in two driver threads: each joins its input
-rows back to that leaf (Part 3 applies the food fallback,
-``apply_fda_food``, to its side only), ends at an eager leaf of its own
-and materializes the side Part 4 reads from it: the Annex candidate
-index, or the eSOA bridge side. Part 4 bridges the two sides and ends
-at a leaf too. The three summary aggregations (Part 2 stats, Part 3
-stats, Part 4 reasons) run concurrently over those leaves. Each Part's
-plan is therefore built over leaves, never over an earlier Part's
-derivation.
+Every drugs entry point (this runner, the ITEM_REF_CODE dispatcher and
+the part-file stream) runs Part 1 as ``build_reference`` and Part 3's
+merge-back as ``merge_tagged``.
+
+Execution shape. Part 1 parses the PNF once into a leaf and ends at
+materialized dims. Parts 2 and 3 tag against the same dims, and a
+text's tagged row depends only on the text and the dims, so ONE
+``tag_descriptions`` call tags the union of the Annex descriptions and
+the eSOA texts, without the food dim, and ends at an eager
+``localCheckpoint`` leaf; the tagger's persisted intermediates are
+released once that leaf exists. Parts 2 and 3 then run concurrently in
+two driver threads: each joins its input rows back to that leaf (Part
+3 through ``merge_tagged``, which applies the food fallback to its side
+only), ends at an eager leaf of its own and materializes the side Part
+4 reads from it: the Annex candidate index, or the eSOA bridge side.
+Part 4 bridges the two sides and ends at a leaf too. The three summary
+aggregations (Part 2 stats, Part 3 stats, Part 4 reasons) run
+concurrently over those leaves. Each Part's plan is therefore built
+over leaves, never over an earlier Part's derivation.
 """
 
 from __future__ import annotations
@@ -45,6 +47,7 @@ from ..plans.bridge import (  # noqa: F401
 )
 from ..plans.tagger import apply_fda_food, tag_descriptions
 from ..session import run_concurrently
+from ..sources.readers import with_input_position
 from ..sources.writers import append_metrics
 from .drugs import (
     build_unified_atc,
@@ -85,9 +88,6 @@ def flag_combination_atc(atc: DataFrame) -> DataFrame:
     )
 
 
-_flag_combination_atc = flag_combination_atc
-
-
 def _part_stats(
     tagged: DataFrame,
 ) -> tuple[int, int, int, dict[str, int], dict[str, int]]:
@@ -123,44 +123,41 @@ def _part_stats(
     return total, n_atc, n_db, coarse, granular
 
 
-def run_drugs_all(
-    spark: SparkSession,
-    inputs: dict[str, DataFrame],
-    metrics_path: str | None = None,
-    checkpoint_dir: str | None = None,
-) -> RunResult:
-    """Parts 1-4. ``inputs`` carries the reference-shaped tables:
-    pnf, drugbank_generics, drugbank_atc, drugbank_brands, fda_brands,
-    who_atc, mixtures, annex_f (drug_code, drug_description), esoa
-    (raw_text)."""
-    # ---- Part 1: unified reference ------------------------------------
+def build_reference(
+    spark: SparkSession, inputs: dict[str, DataFrame], checkpoint_dir: str | None = None
+) -> tuple[DataFrame, dict[str, DataFrame | None]]:
+    """Part 1, the unified reference (build_unified_reference.py:67-535).
+    Returns the PNF leaf and the materialized dims: ``tag_descriptions``'
+    keyword arguments plus ``fda_food_dim``, which only Part 3
+    (``merge_tagged``) applies. ``checkpoint_dir`` writes the four
+    unified dims as parquet there and reads them back."""
     # Parse the PNF once: every branch that reads pnf_prepared (the
     # generics spine, its anti-joins and pnf_raw leg, the ATC build)
     # would otherwise re-run its pandas UDFs.
-    from ..plans.tagger import _materialize_dim, _materialize_dims
+    from ..plans import tagger
+    from . import drugs
 
-    pnf_prepared = _materialize_dim(prepare_pnf(inputs["pnf"]))
+    pnf_prepared = tagger._materialize_dim(prepare_pnf(inputs["pnf"]))
     generics = build_unified_generics(
         inputs["drugbank_generics"], inputs["who_atc"], pnf_prepared
     )
-    atc = _flag_combination_atc(
+    atc = flag_combination_atc(
         build_unified_atc(inputs["drugbank_atc"], inputs["who_atc"], pnf_prepared,
                           drugbank_generics=inputs["drugbank_generics"])
     )
     brands = build_unified_brands(inputs["fda_brands"], inputs["drugbank_brands"],
                                   drugbank_generics=inputs["drugbank_generics"])
+    # not component_generics: the tagger reads it into reference_text
+    # when present
     mixtures = build_unified_mixtures(inputs["mixtures"]).selectExpr(
         "component_key", "mixture_name", "drugbank_id"
     )
     if checkpoint_dir:
-        for name, df in [("unified_generics", generics), ("unified_atc", atc),
-                         ("unified_brands", brands), ("unified_mixtures", mixtures)]:
-            path = os.path.join(checkpoint_dir, name)
+        paths = [os.path.join(checkpoint_dir, f"unified_{name}")
+                 for name in ("generics", "atc", "brands", "mixtures")]
+        for df, path in zip((generics, atc, brands, mixtures), paths):
             df.write.mode("overwrite").parquet(path)
-        generics = spark.read.parquet(os.path.join(checkpoint_dir, "unified_generics"))
-        atc = spark.read.parquet(os.path.join(checkpoint_dir, "unified_atc"))
-        brands = spark.read.parquet(os.path.join(checkpoint_dir, "unified_brands"))
-        mixtures = spark.read.parquet(os.path.join(checkpoint_dir, "unified_mixtures"))
+        generics, atc, brands, mixtures = (spark.read.parquet(p) for p in paths)
 
     synonyms = inputs.get("synonyms")  # optional (synonym, generic_name) rows
     # Also accept the reference's unified_synonyms shape directly
@@ -178,40 +175,72 @@ def run_drugs_all(
         # TABLE-2 admission — only spine-resolved synonyms reach the
         # tagger (r9, full-chain differential catch; see
         # drugs.resolve_synonym_rows)
-        from .drugs import resolve_synonym_rows
-
-        synonyms = resolve_synonym_rows(synonyms, inputs["drugbank_generics"])
-    # optional FDA food registry (food_name, food_type, registration) —
-    # unmatched texts that hit it are food, not unrecognized drugs
-    # (runners.py:1428-1496)
-    fda_food = inputs.get("fda_food")
+        synonyms = drugs.resolve_synonym_rows(synonyms, inputs["drugbank_generics"])
 
     # Materialize the dims once, ahead of the tag pass and the food
-    # fallback; tag_descriptions would otherwise localCheckpoint them. See
-    # plans/tagger._materialize_dim / SCALE.md measured lesson #3.
-    generics, atc, brands, mixtures, synonyms, fda_food = _materialize_dims(
-        generics, atc, brands, mixtures, synonyms, fda_food
+    # fallback (optional FDA food registry: food_name, food_type,
+    # registration — runners.py:1428-1496); tag_descriptions would
+    # otherwise localCheckpoint them. See plans/tagger._materialize_dim
+    # / SCALE.md measured lesson #3.
+    generics, atc, brands, mixtures, synonyms, fda_food = tagger._materialize_dims(
+        generics, atc, brands, mixtures, synonyms, inputs.get("fda_food")
+    )
+    return pnf_prepared, {
+        "generics_dim": generics, "atc_dim": atc, "brands_dim": brands,
+        "mixtures_dim": mixtures, "synonyms_dim": synonyms, "fda_food_dim": fda_food,
+    }
+
+
+def fill_untaggable(df: DataFrame) -> DataFrame:
+    """Label the rows of blank/null texts as the reference does."""
+    # The reference tags THROUGH fillna('') — a blank text reaches its
+    # tagger and comes back matched=False with match_reason=
+    # 'no_candidates' (runners.py:205, tagger.py:391,440 + the
+    # empty-candidates branch at tagger.py:821-832), so such rows are
+    # COUNTED in reason_counts. The engine's tag() excludes blank/null
+    # texts from the tag relation entirely (plans/tagger.py:396), so a
+    # join-back leaves matched/match_reason NULL for exactly those rows
+    # (r11 ADVICE item; diff_reference_metrics plants blank and null
+    # texts to pin this).
+    return df.withColumns({
+        "matched": F.coalesce(F.col("matched"), F.lit(False)),
+        "match_reason": F.coalesce(F.col("match_reason"), F.lit("no_candidates")),
+    })
+
+
+def merge_tagged(
+    rows: DataFrame, tagged: DataFrame, text_col: str = "raw_text",
+    fda_food_dim: DataFrame | None = None,
+) -> DataFrame:
+    """Part 3's merge-back to ONE ROW PER INPUT ROW (A6,
+    runners.py:193-231): left-join ``rows`` on ``text_col`` to
+    ``tagged`` (the tagger's distinct texts, keyed on ``raw_text``),
+    apply the food fallback when ``fda_food_dim`` is given, fill
+    untaggable rows. Columns: ``rows``' own, then the tagged ones."""
+    # the food fallback is an eSOA-side disambiguator in the reference;
+    # Annex descriptions are drugs by construction
+    out = rows.withColumnRenamed(text_col, "raw_text").join(tagged, "raw_text", "left")
+    if fda_food_dim is not None:
+        out = apply_fda_food(out, fda_food_dim)
+    out = fill_untaggable(out)
+    return out.select(
+        *[F.col("raw_text").alias(c) if c == text_col else F.col(c) for c in rows.columns],
+        *[c for c in out.columns if c != "raw_text" and c not in rows.columns],
     )
 
-    # Blank/null texts: the reference tags THROUGH fillna('') — a
-    # blank text reaches its tagger and comes back matched=False with
-    # match_reason='no_candidates' (runners.py:205, tagger.py:391,440
-    # + the empty-candidates branch at tagger.py:821-832), so such
-    # rows are COUNTED in reason_counts. The engine's tag() excludes
-    # blank/null texts from the tag relation entirely (plans/
-    # tagger.py:396), so the join-back leaves matched/match_reason
-    # NULL for exactly those rows — fill them to the reference's
-    # values (r11 ADVICE item; diff_reference_metrics plants blank and
-    # null texts to pin this).
-    def _fill_untaggable(df: DataFrame) -> DataFrame:
-        return df.withColumns(
-            {
-                "matched": F.coalesce(F.col("matched"), F.lit(False)),
-                "match_reason": F.coalesce(
-                    F.col("match_reason"), F.lit("no_candidates")
-                ),
-            }
-        )
+
+def run_drugs_all(
+    spark: SparkSession,
+    inputs: dict[str, DataFrame],
+    metrics_path: str | None = None,
+    checkpoint_dir: str | None = None,
+) -> RunResult:
+    """Parts 1-4. ``inputs`` carries the reference-shaped tables:
+    pnf, drugbank_generics, drugbank_atc, drugbank_brands, fda_brands,
+    who_atc, mixtures, annex_f (drug_code, drug_description), esoa
+    (raw_text), and optionally synonyms and fda_food."""
+    _, dims = build_reference(spark, inputs, checkpoint_dir)
+    fda_food = dims.pop("fda_food_dim")
 
     # ---- Parts 2 and 3: one tag pass, two join-backs ------------------
     # A text's tagged row depends only on the text and the dims (pinned
@@ -223,14 +252,11 @@ def run_drugs_all(
     #
     # annex_order pins the reference's candidate insertion order (the
     # W3 stable-sort tie-break) to the Annex input row order.
-    annex_src = inputs["annex_f"].withColumn(
-        "annex_order", F.monotonically_increasing_id()
-    )
+    annex_src = with_input_position(inputs["annex_f"], "annex_order")
     tag_plan = tag_descriptions(
         annex_src.select(F.col("drug_description").alias("raw_text"))
         .unionByName(inputs["esoa"].select("raw_text")),
-        generics_dim=generics, atc_dim=atc, brands_dim=brands,
-        mixtures_dim=mixtures, synonyms_dim=synonyms,
+        **dims,
     )
     tagged = tag_plan.localCheckpoint(eager=True)
     # The leaf holds the tagged rows, so nothing reads the tagger's
@@ -244,7 +270,7 @@ def run_drugs_all(
     # consumed by the stats, Part 4 and the caller) and then
     # materializes the side Part 4 reads from it.
     def part2() -> tuple[DataFrame, DataFrame]:
-        annex_tagged = _fill_untaggable(
+        annex_tagged = fill_untaggable(
             tagged.join(
                 annex_src.select(
                     "drug_code", F.col("drug_description").alias("raw_text"), "annex_order"
@@ -255,25 +281,16 @@ def run_drugs_all(
         ).localCheckpoint(eager=True)
         return annex_tagged, annex_bridge_side(annex_tagged)
 
-    # Part 3 joins back to the INPUT ROWS (A6): the reference's
-    # esoa_with_atc is one row per input row — tag_batch(deduplicate=
-    # True) merges results back by text (runners.py:193-231) — so a
-    # corpus with duplicate texts keeps its duplicates in the output AND
-    # in the coverage denominators (r11 metrics-parity catch: the engine
-    # previously emitted one row per DISTINCT text, silently shrinking
-    # Part-3/Part-4 totals on duplicate-bearing corpora). Part 4 bridges
-    # per DISTINCT text (its internal aggregations assume one row per
-    # text) and consumes the TAGGED columns (the reference reads
-    # annex_f_with_atc + esoa_with_atc, runners.py:287-330) — candidate
-    # keys come from matched_generic_name and the dose/form/route token
-    # columns, never from re-parsed raw text.
+    # Part 3 joins back to the INPUT ROWS (merge_tagged). Part 4
+    # bridges per DISTINCT text (its internal aggregations assume one
+    # row per text) and consumes the TAGGED columns (the reference
+    # reads annex_f_with_atc + esoa_with_atc, runners.py:287-330) —
+    # candidate keys come from matched_generic_name and the
+    # dose/form/route token columns, never from re-parsed raw text.
     def part3() -> tuple[DataFrame, DataFrame]:
-        esoa_tagged = inputs["esoa"].join(tagged, "raw_text", "left")
-        if fda_food is not None:
-            # the food fallback is an eSOA-side disambiguator in the
-            # reference; Annex descriptions are drugs by construction
-            esoa_tagged = apply_fda_food(esoa_tagged, fda_food)
-        esoa_tagged = _fill_untaggable(esoa_tagged).localCheckpoint(eager=True)
+        esoa_tagged = merge_tagged(
+            inputs["esoa"], tagged, fda_food_dim=fda_food
+        ).localCheckpoint(eager=True)
         return esoa_tagged, esoa_bridge_side(esoa_tagged.dropDuplicates(["raw_text"]))
 
     (annex_tagged, annex_side), (esoa_tagged, esoa_side) = run_concurrently(
@@ -360,15 +377,10 @@ def run_drugs_all(
     # (BASELINE.md, run_summary.md of commit fc944cd). The percentages
     # only MEAN parity when run on reference-shaped real inputs — on
     # fixtures/synthetic data the deltas are tracked, not judged.
-    baseline = {
-        "annex_atc_pct": 95.5,
-        "esoa_atc_pct": 71.4,
-        "esoa_drug_code_pct": 34.9,
-    }
+    baseline = {"annex_atc_pct": 95.5, "esoa_atc_pct": 71.4, "esoa_drug_code_pct": 34.9}
     ours = {
-        "annex_atc_pct": 100.0 * a_atc / a_n if a_n else 0.0,
-        "esoa_atc_pct": 100.0 * e_atc / e_n if e_n else 0.0,
-        "esoa_drug_code_pct": 100.0 * n_bridged / n_total if n_total else 0.0,
+        k: 100.0 * x / n if n else 0.0
+        for k, (x, n) in zip(baseline, ((a_atc, a_n), (e_atc, e_n), (n_bridged, n_total)))
     }
     lines += ["- Coverage vs BASELINE.md (ours / reference / delta):"] + [
         f"  - {k}: {ours[k]:.1f}% / {baseline[k]:.1f}% / {ours[k] - baseline[k]:+.1f}pp"
@@ -389,19 +401,15 @@ def run_drugs_all(
     # under its own schema-stable parquet path instead.
     def _pct2(x: int, n: int) -> float:
         return round(100.0 * x / n, 2) if n else 0
+
+    def _tag_row(n: int, atc: int, db: int) -> dict:
+        return {"total": n, "matched_atc": atc, "matched_atc_pct": _pct2(atc, n),
+                "matched_drugbank": db, "matched_drugbank_pct": _pct2(db, n)}
     part_metrics = {
-        "annex_f": {
-            "total": a_n, "matched_atc": a_atc, "matched_atc_pct": _pct2(a_atc, a_n),
-            "matched_drugbank": a_db, "matched_drugbank_pct": _pct2(a_db, a_n),
-        },
-        "esoa": {
-            "total": e_n, "matched_atc": e_atc, "matched_atc_pct": _pct2(e_atc, e_n),
-            "matched_drugbank": e_db, "matched_drugbank_pct": _pct2(e_db, e_n),
-        },
-        "esoa_to_drug_code": {
-            "total": n_total, "matched": n_bridged,
-            "matched_pct": _pct2(n_bridged, n_total),
-        },
+        "annex_f": _tag_row(a_n, a_atc, a_db),
+        "esoa": _tag_row(e_n, e_atc, e_db),
+        "esoa_to_drug_code": {"total": n_total, "matched": n_bridged,
+                              "matched_pct": _pct2(n_bridged, n_total)},
     }
     if metrics_path:
         append_metrics(spark, metrics_path, {k: str(v) for k, v in coverage.items()})

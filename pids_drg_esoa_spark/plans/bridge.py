@@ -78,6 +78,7 @@ PARSED_SIDE_SCHEMA = T.StructType(
 # ---------------------------------------------------------------------------
 from ..functions.constants import DRUGBANK_COMPONENT_SYNONYMS, GARBAGE_TOKENS
 from ..functions.vocab_full import ALL_DRUG_SYNONYMS_FULL
+from ..sources.readers import with_input_position
 
 _DOSE_LIKE_RE = None  # compiled lazily inside the UDF worker
 
@@ -393,11 +394,11 @@ def build_annex_index(annex_f: DataFrame) -> DataFrame:
     ``annex_order`` is the W3 tie-break secondary key: the reference's
     stable sort keeps Annex INSERTION order on details-score ties
     (runners.py:959-1010,1367-1371). Callers may provide an explicit
-    ``annex_order`` column; otherwise it derives from the read order
-    (monotonically_increasing_id — file order for the single-file dim
-    the Annex is; a multi-file Annex should carry its own order col)."""
+    ``annex_order`` column; otherwise it is the input position
+    (``with_input_position`` — file order for the single-file dim the
+    Annex is; a multi-file Annex should carry its own order col)."""
     if "annex_order" not in annex_f.columns:
-        annex_f = annex_f.withColumn("annex_order", F.monotonically_increasing_id())
+        annex_f = with_input_position(annex_f, "annex_order")
     parsed = annex_f.select(
         F.col("drug_code"),
         F.col("drug_description"),
@@ -457,9 +458,7 @@ def build_annex_index_ref(annex_tagged: DataFrame) -> DataFrame:
     per (index key → drug code) with the row's dose key / form / route
     (runners.py:1012-1094 — dict index as a broadcast relation)."""
     if "annex_order" not in annex_tagged.columns:
-        annex_tagged = annex_tagged.withColumn(
-            "annex_order", F.monotonically_increasing_id()
-        )
+        annex_tagged = with_input_position(annex_tagged, "annex_order")
     desc_col = (
         F.col("drug_description") if "drug_description" in annex_tagged.columns
         else F.col("raw_text")

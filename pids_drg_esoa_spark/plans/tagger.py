@@ -1101,7 +1101,6 @@ def tag_descriptions(
     synonyms_dim: DataFrame | None = None,
     brands_dim: DataFrame | None = None,
     mixtures_dim: DataFrame | None = None,
-    fda_food_dim: DataFrame | None = None,
     text_col: str = "raw_text",
 ) -> DataFrame:
     """Tag each distinct description with (generic_name, drugbank_id,
@@ -1116,7 +1115,7 @@ def tag_descriptions(
     try:
         tagged = _tag_descriptions_impl(
             esoa, generics_dim, atc_dim, synonyms_dim, brands_dim,
-            mixtures_dim, fda_food_dim, text_col, persisted,
+            mixtures_dim, text_col, persisted,
         )
     except BaseException:
         for r in persisted:
@@ -1133,7 +1132,6 @@ def _tag_descriptions_impl(
     synonyms_dim: DataFrame | None,
     brands_dim: DataFrame | None,
     mixtures_dim: DataFrame | None,
-    fda_food_dim: DataFrame | None,
     text_col: str,
     persisted: list[DataFrame],
 ) -> DataFrame:
@@ -1157,10 +1155,7 @@ def _tag_descriptions_impl(
         brands_dim,
         mixtures_dim,
         synonyms_dim,
-        fda_food_dim,
-    ) = _materialize_dims(
-        generics_dim, atc_dim, brands_dim, mixtures_dim, synonyms_dim, fda_food_dim
-    )
+    ) = _materialize_dims(generics_dim, atc_dim, brands_dim, mixtures_dim, synonyms_dim)
 
     # The reference seeds its synonym dict with the SPELLING_SYNONYMS
     # canonical rewrites and the regional→US reverse map BEFORE the
@@ -1581,7 +1576,7 @@ def _tag_descriptions_impl(
         ),
     }
     dropped = {"stripped", "_details_generic", "had_candidates"}
-    tagged = joined.select(
+    return joined.select(
         *[
             replacements[c].alias(c) if c in replacements else F.col(c)
             for c in joined.columns
@@ -1589,9 +1584,6 @@ def _tag_descriptions_impl(
         ],
         matched.alias("matched"),
     )
-    if fda_food_dim is not None:
-        tagged = apply_fda_food(tagged, fda_food_dim)
-    return tagged
 
 
 def apply_fda_food(tagged: DataFrame, fda_food_dim: DataFrame) -> DataFrame:
@@ -1599,9 +1591,9 @@ def apply_fda_food(tagged: DataFrame, fda_food_dim: DataFrame) -> DataFrame:
     text that hits the food registry (whole text, else any token ≥ 4
     chars) is food, not an unrecognized drug — label it so instead of
     'unmatched'. ``tagged`` is any relation with the tagger's
-    ``raw_text``/``matched``/``match_reason`` columns: one row per
-    distinct text (``tag_descriptions(..., fda_food_dim=)``) or the
-    input rows joined back to a tagged leaf (the runner's eSOA side).
+    ``raw_text``/``matched``/``match_reason`` columns; its one caller
+    is Part 3's merge-back (``pipelines.runner.merge_tagged``), which
+    applies it to the input rows joined back to the tagged texts.
 
     Both food lookups run per distinct text, matched or not, and are
     joined into ``tagged`` ONCE: a second branch that filtered

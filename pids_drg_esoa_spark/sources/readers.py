@@ -16,7 +16,7 @@ import os
 import re
 from datetime import date
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -83,6 +83,19 @@ def read_table_prefer_parquet(spark: SparkSession, base_path: str) -> DataFrame:
     return read_csv(spark, f"{base_path}.csv")
 
 
+def with_input_position(df: DataFrame, col: str) -> DataFrame:
+    """Add ``col``: each row's 0-based position in ``df``'s input order,
+    the same however the input is partitioned. For small dims (a
+    one-partition window)."""
+    # monotonically_increasing_id keeps the order but encodes the
+    # partition index in its values; its rank does not
+    return (
+        df.withColumn("_input_id", F.monotonically_increasing_id())
+        .withColumn(col, (F.row_number().over(W.orderBy("_input_id")) - 1).cast("long"))
+        .drop("_input_id")
+    )
+
+
 _PART_RE = re.compile(r"_pt_(\d+)\.csv$")
 
 
@@ -113,8 +126,6 @@ def read_part_files(
     part_no = F.regexp_extract(F.input_file_name(), r"_pt_(\d+)\.csv", 1).cast("int")
     df = df.withColumn("part_no", part_no)
     if dedupe_cols:
-        from pyspark.sql import Window as W
-
         w = W.partitionBy(*dedupe_cols).orderBy("part_no")
         df = df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
     return df

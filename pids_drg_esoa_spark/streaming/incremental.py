@@ -5,7 +5,9 @@ re-tags from scratch (run_drugs_all.py:312-382). Structured Streaming
 turns the same layout into incremental processing: a file source
 watches the directory, each new part becomes a micro-batch, and
 ``foreachBatch`` runs the SAME batch tagging plan on just the new
-rows — exactly-once per file, no re-tagging of old parts.
+rows — exactly-once per file, no re-tagging of old parts — and the
+drugs chain's own Part-3 merge-back (``pipelines.runner.merge_tagged``),
+so a part's output rows are the rows ``run_drugs_all`` emits for them.
 
 At scale this is the 100 TB ingestion path: tagging cost is
 O(new data) per trigger instead of O(all data) per run.
@@ -13,9 +15,11 @@ O(new data) per trigger instead of O(all data) per run.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 ESOA_PART_SCHEMA = T.StructType(
@@ -57,13 +61,14 @@ def stream_tag_esoa_parts(
     dims: dict,
     output_path: str,
     checkpoint_dir: str,
-    item_ref_code: str = "DrugsAndMedicine",
     on_batch: Callable[[int, int], None] | None = None,
 ):
     """The incremental form of the reference's Part-3 eSOA tagging
     (run_drugs_all.py:312-382 re-reads and re-tags every part per
     run): watch the part directory, run the SAME batch tagger plan
-    (plans/tagger.tag_descriptions) on each new part only, write the
+    (plans/tagger.tag_descriptions) on each new part's DrugsAndMedicine
+    rows only and the chain's merge-back (pipelines/runner.merge_tagged:
+    one row per input row, blank rows no_candidates), write the
     tagged rows under ``output_path``. foreachBatch is AT-LEAST-once
     (a retry re-runs the batch after a crash mid-commit), so each
     batch OVERWRITES its own ``batch_id=N`` partition subdirectory —
@@ -77,26 +82,26 @@ def stream_tag_esoa_parts(
     is unreadable. Tagging cost is O(new rows) per trigger — the
     100 TB ingestion path.
 
-    ``dims`` carries tag_descriptions' dim kwargs (generics_dim,
-    atc_dim, ...). They are materialized to plan leaves ONCE here, not
+    ``dims`` carries Part 1's dims (runner.build_reference):
+    tag_descriptions' dim kwargs, and optionally ``fda_food_dim`` for
+    the merge-back. They are materialized to plan leaves ONCE here, not
     per micro-batch, so each trigger pays only the probe-side plan.
     ``on_batch(batch_id, n_tagged)`` is an optional metrics hook (S8:
     pair with sources.writers.append_metrics)."""
-    import os
-
+    from ..pipelines.drugs import DrugsPipeline
+    from ..pipelines.runner import merge_tagged
     from ..plans.tagger import _materialize_dims, tag_descriptions
 
     keys = list(dims)
     mat = dict(zip(keys, _materialize_dims(*(dims[k] for k in keys))))
+    fda_food = mat.pop("fda_food_dim", None)
 
     def process(batch_df, batch_id: int) -> None:
-        rows = batch_df.filter(batch_df["ITEM_REF_CODE"] == item_ref_code)
+        rows = batch_df.filter(batch_df["ITEM_REF_CODE"] == DrugsPipeline.item_ref_code)
         tagged = tag_descriptions(
             rows.withColumnRenamed("DESCRIPTION", "raw_text"), **mat
         )
-        out = rows.join(tagged, rows["DESCRIPTION"] == tagged["raw_text"], "left").drop(
-            "raw_text"
-        )
+        out = merge_tagged(rows, tagged, "DESCRIPTION", fda_food_dim=fda_food)
         # idempotent under at-least-once retry: the batch owns its
         # partition subdir and a re-run overwrites it in place
         batch_dir = os.path.join(output_path, f"batch_id={batch_id}")
@@ -171,10 +176,6 @@ def stream_neardup_against_index(
         minhash_signature,
         word_shingles,
     )
-    from pyspark.sql import functions as F
-
-    import os
-
     idx_sh = word_shingles(index_docs, text_col, id_col).persist()
     idx_sig = minhash_signature(idx_sh).persist()
     idx_bands = band_signature(idx_sig).persist()
@@ -310,10 +311,6 @@ def stream_embdup_against_index(
 
     The persisted static index outlives the returned query (exposed
     as ``query.embdup_index`` for callers that rebuild it)."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from ..operators.similarity import (
         NEAR_DUP_DOT_MIN,
         int_dot,

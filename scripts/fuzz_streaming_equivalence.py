@@ -37,14 +37,7 @@ def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 1200
     seeds = [int(s) for s in sys.argv[2:]] or [5, 91, 4047]
 
-    from pyspark.sql import functions as F
-
-    from pids_drg_esoa_spark.pipelines.drugs import (
-        build_unified_atc, build_unified_brands, build_unified_generics,
-        build_unified_mixtures, build_unified_synonyms, prepare_pnf,
-        resolve_synonym_rows,
-    )
-    from pids_drg_esoa_spark.pipelines.runner import flag_combination_atc
+    from pids_drg_esoa_spark.pipelines.runner import build_reference
     from pids_drg_esoa_spark.plans.tagger import tag_descriptions
     from pids_drg_esoa_spark.session import get_spark
     from pids_drg_esoa_spark.streaming.incremental import stream_tag_esoa_parts
@@ -53,28 +46,13 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     # one dim build for all seeds (the property under test is the
-    # INPUT PARTITIONING, not the dims)
+    # INPUT PARTITIONING, not the dims): the chain's own Part 1 over
+    # the parity corpus's raw tables (raw synonym rows included)
     pdims = dr.build_dims()
-    sdims = {k: spark.createDataFrame(v) for k, v in pdims.items()}
-    pnf_prepared = prepare_pnf(sdims["pnf"])
-    dims = {
-        "generics_dim": build_unified_generics(
-            sdims["drugbank_generics"], sdims["who_atc"], pnf_prepared),
-        "atc_dim": flag_combination_atc(build_unified_atc(
-            sdims["drugbank_atc"], sdims["who_atc"], pnf_prepared,
-            drugbank_generics=sdims["drugbank_generics"])),
-        "brands_dim": build_unified_brands(
-            sdims["fda_brands"], sdims["drugbank_brands"],
-            drugbank_generics=sdims["drugbank_generics"]),
-        "mixtures_dim": build_unified_mixtures(sdims["mixtures"]),
-        # the runner's wiring shape: unified (pipe-joined) synonyms
-        # exploded back to (synonym, generic_name) rows
-        "synonyms_dim": build_unified_synonyms(resolve_synonym_rows(
-            sdims["synonyms"], sdims["drugbank_generics"]))
-        .select(F.explode(F.split("synonyms", "\\|")).alias("synonym"),
-                F.col("generic_name"))
-        .filter(F.col("synonym") != ""),
-    }
+    _, dims = build_reference(
+        spark, {k: spark.createDataFrame(v) for k, v in pdims.items()}
+    )
+    tag_dims = {k: v for k, v in dims.items() if k != "fda_food_dim"}
 
     total_bad = 0
     for seed in seeds:
@@ -90,7 +68,7 @@ def main() -> int:
 
         # --- batch truth: tag the distinct corpus in one plan
         esoa = spark.createDataFrame(pd.DataFrame({"raw_text": texts}))
-        batch = tag_descriptions(esoa, **dims)
+        batch = tag_descriptions(esoa, **tag_dims)
         batch_rows = {r["raw_text"]: r for r in batch.collect()}
         for r in getattr(batch, "persisted_intermediates", ()):
             r.unpersist()

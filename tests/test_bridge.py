@@ -320,6 +320,25 @@ def test_w3_tie_break_annex_insertion_order(spark):
     assert (row2.drug_code, row2.match_reason) == ("A1", "matched_perfect")
 
 
+def test_annex_order_is_independent_of_partitioning(spark):
+    """``annex_order`` is the 0-based input position: the same Annex
+    rows split into 1 or 4 partitions get the same values, so Part 2's
+    output does not depend on the session's core count."""
+    from pids_drg_esoa_spark.plans.bridge import build_annex_index
+
+    rows = [(f"D{i}", f"GEN{i} {100 * (i + 1)} MG TABLET") for i in range(8)]
+
+    def orders(n_partitions):
+        annex = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, n_partitions),
+            "drug_code string, drug_description string",
+        )
+        return sorted({(r.drug_code, r.annex_order)
+                       for r in build_annex_index(annex).collect()})
+
+    assert orders(1) == orders(4) == [(c, i) for i, (c, _) in enumerate(rows)]
+
+
 def test_w3_tie_break_component_position_first(spark):
     """Score ties spanning two eSOA components resolve by COMPONENT
     position before annex order — the reference collects candidates

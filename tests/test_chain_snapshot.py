@@ -17,10 +17,6 @@ When a change is meant to move the output, regenerate the snapshot from
 the repository root and say in the change why the output moved:
 
     python tests/test_chain_snapshot.py
-
-It uses the session settings of ``tests/conftest.py`` (8 local cores,
-8 shuffle partitions): the Annex F ``annex_order`` ids depend on the
-input's partitioning, so the snapshot holds only for those settings.
 """
 
 from __future__ import annotations

@@ -137,25 +137,6 @@ def test_drugs_pipeline_end_to_end(spark, inputs):
     m = ctx.artifacts["metrics"].collect()[0]
     assert (m.n_total, m.n_matched) == (4, 3)
 
-def test_drugs_pipeline_parses_the_pnf_once(spark, inputs, monkeypatch):
-    """The ITEM_REF_CODE dispatcher hands both unified builders that read
-    the PNF a leaf, so its pandas UDFs run once, not once per branch."""
-    from pids_drg_esoa_spark.pipelines import drugs
-
-    pnf_seen = []
-    for name in ("build_unified_generics", "build_unified_atc"):
-        def spy(*args, _real=getattr(drugs, name), **kwargs):
-            pnf_seen.append(args[2])
-            return _real(*args, **kwargs)
-
-        monkeypatch.setattr(drugs, name, spy)
-    get_pipeline("DrugsAndMedicine").prepare_inputs(
-        PipelineContext(spark=spark, inputs=dict(inputs))
-    )
-    assert len(pnf_seen) == 2
-    for pnf in pnf_seen:
-        assert pnf._jdf.queryExecution().optimizedPlan().children().size() == 0
-
 
 def test_prepare_pnf_first_present_spec_column_only(spark):
     # prepare.py:95-96 — _tech is text_cols[0].fillna(''), NOT a per-row

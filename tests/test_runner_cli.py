@@ -155,8 +155,8 @@ def test_concurrent_runner_matches_sequential_flow(spark, flow_inputs, monkeypat
     """run_drugs_all tags the Annex F and eSOA texts in one call, joins
     each Part's rows back to that leaf concurrently and applies the food
     fallback to the eSOA side only. The sequential flow composed from the
-    public functions (tag Annex without food, tag eSOA with food, bridge)
-    gives the same rows, columns, coverage and reason counts. One
+    public functions (tag Annex, tag eSOA and merge it back with food,
+    bridge) gives the same rows, columns, coverage and reason counts. One
     description is in both inputs, stays unmatched and hits the food
     registry: its Annex row carries no food label. The unified builders
     read the PNF as a leaf (parsed once, not once per branch)."""
@@ -165,6 +165,7 @@ def test_concurrent_runner_matches_sequential_flow(spark, flow_inputs, monkeypat
     from pids_drg_esoa_spark.pipelines import drugs, runner
     from pids_drg_esoa_spark.plans.bridge import bridge_metrics, bridge_to_drug_codes
     from pids_drg_esoa_spark.plans.tagger import tag_descriptions
+    from pids_drg_esoa_spark.sources.readers import with_input_position
 
     food_text = "ENERGY BISCUIT"
     i = dict(
@@ -203,21 +204,17 @@ def test_concurrent_runner_matches_sequential_flow(spark, flow_inputs, monkeypat
         mixtures_dim=drugs.build_unified_mixtures(i["mixtures"]).selectExpr(
             "component_key", "mixture_name", "drugbank_id"),
     )
-    fill = {
-        "matched": F.coalesce(F.col("matched"), F.lit(False)),
-        "match_reason": F.coalesce(F.col("match_reason"), F.lit("no_candidates")),
-    }
-    annex_src = i["annex_f"].withColumn("annex_order", F.monotonically_increasing_id())
-    annex = tag_descriptions(
+    annex_src = with_input_position(i["annex_f"], "annex_order")
+    annex = runner.fill_untaggable(tag_descriptions(
         annex_src.select(F.col("drug_description").alias("raw_text")), **dims
     ).join(
         annex_src.select("drug_code", F.col("drug_description").alias("raw_text"),
                          "annex_order"),
         "raw_text", "right",
-    ).withColumns(fill)
-    esoa = i["esoa"].join(
-        tag_descriptions(i["esoa"], **dims, fda_food_dim=i["fda_food"]), "raw_text", "left"
-    ).withColumns(fill)
+    ))
+    esoa = runner.merge_tagged(
+        i["esoa"], tag_descriptions(i["esoa"], **dims), fda_food_dim=i["fda_food"]
+    )
     bridged = i["esoa"].select("raw_text").join(
         bridge_to_drug_codes(esoa.dropDuplicates(["raw_text"]), annex), "raw_text", "left"
     )

@@ -93,3 +93,35 @@ def test_metrics_comparison_tail(spark, dup_inputs, tmp_path):
     assert all(r["total"] == "6" for r in hist["esoa"])
     # missing history -> empty dict, no raise
     assert metrics_comparison(spark, str(tmp_path / "nope")) == {}
+
+
+def test_dispatcher_emits_the_chain_part3_rows(spark, dup_inputs):
+    """The ITEM_REF_CODE dispatcher runs the chain's Part 1 and Part 3:
+    its esoa_with_atc holds one row per input row (duplicate texts, a
+    blank and a null text included), equal to run_drugs_all's, and its
+    metrics count those rows."""
+    from pids_drg_esoa_spark.pipelines.base import PipelineContext, get_pipeline
+
+    inputs = dict(
+        dup_inputs,
+        esoa=dup_inputs["esoa"].unionByName(spark.createDataFrame([("",)], "raw_text string")),
+    )
+    ctx = PipelineContext(spark=spark, inputs=inputs)
+    get_pipeline("DrugsAndMedicine").run(ctx)
+    got = ctx.artifacts["esoa_with_atc"]
+    want = run_drugs_all(spark, inputs).esoa_with_atc
+    assert got.columns == want.columns
+    want_rows = want.collect()
+    assert sorted(repr(r) for r in got.collect()) == sorted(repr(r) for r in want_rows)
+    assert len(want_rows) == 7
+    blank = {
+        r.raw_text: (r.matched, r.match_reason)
+        for r in got.filter("raw_text = '' OR raw_text IS NULL").collect()
+    }
+    assert blank == {"": (False, "no_candidates"), None: (False, "no_candidates")}
+    m = ctx.artifacts["metrics"].collect()[0]
+    assert (m.n_total, m.n_matched, m.n_atc) == (
+        7,
+        sum(r.matched for r in want_rows),
+        sum(r.atc_primary is not None for r in want_rows),
+    )

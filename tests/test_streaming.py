@@ -155,7 +155,8 @@ def test_streaming_tagger_per_trigger(spark, tmp_path):
     """SURVEY §7 north-star: the batch tagger plan run incrementally —
     each new esoa part is tagged ONCE per trigger (O(new rows)), the
     tagged output accumulates, and a resumed query tags only parts the
-    checkpoint hasn't seen."""
+    checkpoint hasn't seen. Each part's rows come out as the chain's
+    Part 3 emits them: blank descriptions read (False, no_candidates)."""
     from pids_drg_esoa_spark.streaming.incremental import stream_tag_esoa_parts
 
     dims = {
@@ -174,6 +175,8 @@ def test_streaming_tagger_per_trigger(spark, tmp_path):
         "ITEM_NUMBER,ITEM_REF_CODE,DESCRIPTION\n"
         "1,DrugsAndMedicine,PARACETAMOL 500MG TAB\n"
         "2,Laboratory,URINALYSIS\n"
+        "5,DrugsAndMedicine,\n"
+        '6,DrugsAndMedicine,""\n'
     )
     (src / "esoa_pt_2.csv").write_text(
         "ITEM_NUMBER,ITEM_REF_CODE,DESCRIPTION\n"
@@ -187,11 +190,18 @@ def test_streaming_tagger_per_trigger(spark, tmp_path):
         on_batch=lambda bid, n: batches.append((bid, n)),
     )
     q.awaitTermination()
-    # one drug row tagged per trigger (the Laboratory row is filtered)
-    assert sorted(n for _, n in batches) == [1, 1]
-    tagged = {r.DESCRIPTION: r for r in spark.read.parquet(out_dir).collect()}
+    # every drug row comes out once (the Laboratory row is filtered)
+    assert sorted(n for _, n in batches) == [1, 3]
+    out = spark.read.parquet(out_dir)
+    assert out.columns[:3] == ["ITEM_NUMBER", "ITEM_REF_CODE", "DESCRIPTION"]
+    assert "raw_text" not in out.columns
+    rows = out.collect()
+    tagged = {r.DESCRIPTION: r for r in rows}
     assert tagged["PARACETAMOL 500MG TAB"].atc_primary == "N02BE01"
     assert tagged["AMLODIPINE 5MG TAB"].generic_name == "AMLODIPINE"
+    blank = {r.ITEM_NUMBER: (r.matched, r.match_reason) for r in rows
+             if r.ITEM_NUMBER in ("5", "6")}
+    assert blank == {"5": (False, "no_candidates"), "6": (False, "no_candidates")}
 
     # late part: the resumed query tags ONLY the new file
     (src / "esoa_pt_3.csv").write_text(
@@ -205,7 +215,7 @@ def test_streaming_tagger_per_trigger(spark, tmp_path):
     )
     q2.awaitTermination()
     assert [n for _, n in batches] == [1]
-    assert spark.read.parquet(out_dir).count() == 3
+    assert spark.read.parquet(out_dir).count() == 5
 
 
 def test_streaming_neardup_against_static_index(spark, tmp_path):

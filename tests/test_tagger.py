@@ -338,13 +338,21 @@ def fda_food(spark):
 
 def test_fda_food_disambiguation(spark, dims, fda_food):
     """Unmatched texts that hit the FDA food registry are labeled food
-    (runners.py:1428-1496), not 'unmatched'; matched drugs unaffected."""
-    d = dict(dims)
-    d["fda_food_dim"] = fda_food
-    out = _tag(
-        spark, d,
-        ["ENERGY BISCUIT", "CHOCO KOOLAID DRINK", "PARACETAMOL 500MG TAB", "TRULY UNKNOWN"],
+    (runners.py:1428-1496), not 'unmatched'; matched drugs unaffected.
+    The fallback is part of Part 3's merge-back."""
+    from pids_drg_esoa_spark.pipelines.runner import merge_tagged
+
+    esoa = spark.createDataFrame(
+        [(t,) for t in
+         ("ENERGY BISCUIT", "CHOCO KOOLAID DRINK", "PARACETAMOL 500MG TAB", "TRULY UNKNOWN")],
+        "raw_text string",
     )
+    out = {
+        r.raw_text: r
+        for r in merge_tagged(
+            esoa, tag_descriptions(esoa, **dims), fda_food_dim=fda_food
+        ).collect()
+    }
     assert out["ENERGY BISCUIT"].match_reason == "fda_food_product"
     assert out["CHOCO KOOLAID DRINK"].match_reason == "fda_food_brand_partial"
     assert out["PARACETAMOL 500MG TAB"].match_reason == "exact"
@@ -354,7 +362,10 @@ def test_fda_food_disambiguation(spark, dims, fda_food):
 def test_fda_food_fallback_evaluates_validate_once(spark, dims, fda_food):
     """The food fallback reads the tagged relation once: its lookups run
     on the distinct texts, so the F33 validate crossing appears once in
-    the optimized plan, as it does without the food dim."""
+    the optimized plan of Part 3's merge-back, as it does without the
+    food dim."""
+    from pids_drg_esoa_spark.pipelines.runner import merge_tagged
+
     esoa = spark.createDataFrame(
         [("ENERGY BISCUIT",), ("CHOCO KOOLAID DRINK",), ("PARACETAMOL 500MG TAB",)],
         "raw_text string",
@@ -363,8 +374,9 @@ def test_fda_food_fallback_evaluates_validate_once(spark, dims, fda_food):
     def n_validate(tagged):
         return tagged._jdf.queryExecution().optimizedPlan().toString().count("_validate(")
 
-    assert n_validate(tag_descriptions(esoa, **dims)) == 1
-    assert n_validate(tag_descriptions(esoa, **dims, fda_food_dim=fda_food)) == 1
+    tagged = tag_descriptions(esoa, **dims)
+    assert n_validate(merge_tagged(esoa, tagged)) == 1
+    assert n_validate(merge_tagged(esoa, tagged, fda_food_dim=fda_food)) == 1
 
 
 # ---------------------------------------------------------------------------
