@@ -24,8 +24,9 @@ Contract:
   them to ``operators.curation.release_checkpoints``.
 - Background count: a lazily registered checkpoint starts one daemon
   count job that materializes the leaf, in a thread that carries the
-  caller's Spark local properties; ``checkpoint_count`` returns
-  its result, so the caller needs no second count job.
+  caller's Spark local properties, so plan construction downstream of
+  the leaf overlaps its materialization. An eager hit on a lazy entry
+  waits for that count.
 
 All operations are thread-safe. A key is built once: the first caller
 stores a ``Future`` under the lock and builds outside it, and
@@ -126,7 +127,7 @@ class _Checkpoint:
     def _count(self) -> None:
         try:
             self.count.set_result(self.leaf.count())
-        except Exception as exc:  # surfaced by checkpoint_count
+        except Exception as exc:  # surfaced by wait()
             self.count.set_exception(exc)
 
     def wait(self) -> int:
@@ -151,14 +152,3 @@ def cached_checkpoint(df, eager: bool = True):
         return entry.leaf.toDF(*df.columns)
     return entry.leaf
 
-
-def checkpoint_count(df) -> int:
-    """Row count of a leaf returned by ``cached_checkpoint``: the
-    background count of a lazily registered leaf, else a count job."""
-    with _LOCK:
-        slots = list(_STORE.values())
-    built = (s.result() for s in slots if s.done() and s.exception() is None)
-    entry = next((v for v in built if isinstance(v, _Checkpoint) and v.leaf is df), None)
-    if entry is None or entry.count is None:
-        return df.count()
-    return entry.wait()

@@ -488,11 +488,6 @@ def normalize_generic_combination(s: pd.Series) -> pd.Series:
     return s.map(normalize_generic_combination_py)
 
 
-@F.pandas_udf(T.StringType())
-def strip_salt_suffix(s: pd.Series) -> pd.Series:
-    return s.map(strip_salt_suffix_py)
-
-
 @F.pandas_udf(T.ArrayType(T.StringType()))
 def build_combination_keys(comps: pd.Series) -> pd.Series:
     return comps.map(lambda c: build_combination_keys_py(list(c) if c is not None else []))

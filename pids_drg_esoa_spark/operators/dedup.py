@@ -36,18 +36,6 @@ N_BANDS = 4  # rows-per-band r=2 → P(candidate) = 1-(1-j^2)^4
 # non-candidate shingles dominates. Local-bench corpora sit far below.
 _SEMI_FILTER_MIN_DOCS = 100_000
 
-# Below this doc count the minhash pipeline skips persisting its
-# shingle/signature intermediates: persist ALWAYS (r10 re-measure).
-# The r6 crossover (~20-25K docs, below which recompute beat persist)
-# was an artifact of SINGLE-PARTITION materialization — a small
-# parquet corpus arrived as one partition, so cache first-touch ran
-# one-core while the recomputes rode the (also one-core) scan. With
-# word_shingles' parallelism pin the materialization is parallel and
-# persist wins at every measured size (warm best-of-3, sf0.1 5K docs:
-# 0.88 s persist vs 1.42 s recompute; sf0.001 500 docs: 0.90 vs
-# 1.15). Gate kept as a named constant so the r6 shape is restorable.
-_PERSIST_MIN_DOCS = 0
-
 
 # ---------------------------------------------------------------------------
 # Reusable operator functions (DataFrame in → DataFrame out)
@@ -370,8 +358,10 @@ def _verified_pairs_core(
 
     Persist strategy (r10 re-measure): shingle feeds three consumers
     (signature agg, both verify-join sides), signature three more —
-    persist both unconditionally (_PERSIST_MIN_DOCS=0; the r6
-    crossover was a single-partition-materialization artifact).
+    persist both at every size (the r6 crossover, below which
+    recompute beat persist, was a single-partition-materialization
+    artifact; with word_shingles' parallelism pin persist wins at every
+    measured size).
 
     Candidate-doc semi-filter, gated by input size: the semi-join
     (persist pairs + union-distinct ids + leftsemi) adds ~3 fixed
@@ -380,15 +370,9 @@ def _verified_pairs_core(
     counts (judge-measured r4: 3.6 s → 7.3 s at 5K docs), so below
     _SEMI_FILTER_MIN_DOCS the verify join reads the unfiltered
     shingle relation: identical output, fewer stages."""
-    sh = word_shingles(docs, text_col, id_col, 3, n_parts=n_parts)
-    caches: list[DataFrame] = []
-    if n_docs >= _PERSIST_MIN_DOCS:
-        sh = sh.persist()
-        caches.append(sh)
-    sig = minhash_signature(sh)
-    if n_docs >= _PERSIST_MIN_DOCS:
-        sig = sig.persist()
-        caches.append(sig)
+    sh = word_shingles(docs, text_col, id_col, 3, n_parts=n_parts).persist()
+    sig = minhash_signature(sh).persist()
+    caches: list[DataFrame] = [sh, sig]
     if n_docs >= _SEMI_FILTER_MIN_DOCS:
         pairs = lsh_candidate_pairs(sig).persist()
         caches.append(pairs)

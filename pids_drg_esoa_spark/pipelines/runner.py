@@ -45,6 +45,7 @@ from ..plans.bridge import (  # noqa: F401
     bridge_to_drug_codes,
     esoa_bridge_side,
 )
+from ..operators.curation import release_checkpoints
 from ..plans.tagger import apply_fda_food, tag_descriptions
 from ..session import run_concurrently
 from ..sources.readers import with_input_position
@@ -324,6 +325,10 @@ def run_drugs_all(
         )
         .localCheckpoint(eager=True)
     )
+    # Every reader of the tag leaf and of both Part-4 sides now reads
+    # an eager leaf built from them; left cached they would outlive the
+    # run for the rest of the session.
+    release_checkpoints(tagged, annex_side, esoa_side)
 
     # ---- summary + metrics (run_drugs_all.py:52-117) ------------------
     (

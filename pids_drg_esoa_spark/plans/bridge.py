@@ -561,13 +561,14 @@ def annex_bridge_side(annex_f: DataFrame) -> DataFrame:
     Part-2 columns; dims-only mode parses the descriptions."""
     # materialize: the index embeds parse_side's native dose/form
     # expression trees; broadcasting a leaf keeps them out of the
-    # probe-side plan (see plans/tagger._materialize_dim)
-    from .tagger import _materialize_dim
-
-    return _materialize_dim(
+    # probe-side plan. A plain leaf, like esoa_bridge_side's: it is
+    # built from a fresh Part-2 leaf every run, so the caller may
+    # release it once Part 4 is done.
+    index = (
         build_annex_index_ref(annex_f) if _annex_ref_mode(annex_f)
         else build_annex_index(annex_f)
     )
+    return index.localCheckpoint(eager=True)
 
 
 def bridge_sides(esoa: DataFrame, index_mat: DataFrame) -> DataFrame:

@@ -44,14 +44,13 @@ import pandas as pd
 from pyspark.sql import types as T
 
 from ..session import run_concurrently
-from ..functions.exprcache import cached_checkpoint, cached_value, checkpoint_count
+from ..functions.exprcache import cached_checkpoint, cached_value
 from ..functions.fuzzy import fuzz_ratio, length_band_filter
 from ..functions.routes_forms import parse_form_col
 from ..functions.text import normalize_text
 from ..functions.tokens import (
     normalize_generic_combination_native,
     singularize_py,
-    strip_salt_suffix,
 )
 from ..functions.constants import REGIONAL_CANONICAL
 from ..functions.vocab_full import SPELLING_SYNONYMS_FULL
@@ -345,16 +344,6 @@ PRIORITY_SYNONYM_MIXTURE_FALLBACK = 98
 PRIORITY_MIXTURE_FALLBACK = 99
 
 
-# Fallback-tier probe-shape gate: below this many (raw_text, key)
-# pairs, probe per pair (the fixed cost of the distinct-key shape —
-# dkeys shuffle + hits materializations + join-backs — exceeds its
-# savings on tiny corpora); at or above it, probe per distinct key
-# (r6: ~70× fewer fuzzy calls at 155K texts). Measured crossover is
-# broad and flat between ~5K and ~50K pairs; 20K sits in the middle,
-# the same magnitude as dedup's _PERSIST_MIN_DOCS.
-_PER_DISTINCT_MIN_PAIRS = 20_000
-
-
 def _pin_parallelism(df: DataFrame, *cols: str) -> DataFrame:
     """Hash-repartition to 2× the cluster parallelism so the
     PYTHON-heavy stage that follows runs wide. AQE's partition
@@ -383,7 +372,7 @@ def _components(esoa: DataFrame, text_col: str, brand_b, mw_b, syn_b) -> DataFra
         "tagger_doc_enrich", _broadcast_key(brand_b, mw_b, syn_b),
         lambda: _make_doc_enrich(brand_b, mw_b, syn_b),
     )
-    # Explicit repartition after the dedupe shuffle (_pin_parallelism):
+    # Explicit repartition, then the dedupe (_pin_parallelism):
     # AQE's coalescing is BYTE-based (parallelismFirst still coalesces
     # below minPartitionSize), and 155K distinct short texts compress
     # under 1 MB — so without this, AQE collapses the stage to ONE
@@ -395,13 +384,14 @@ def _components(esoa: DataFrame, text_col: str, brand_b, mw_b, syn_b) -> DataFra
     # combination-twin / form expressions embed thousands of vocab
     # literals, and each of the former 15 withColumns re-analyzed the
     # whole tree — pure driver time. Column names and order reproduce
-    # the former chain exactly.
+    # the former chain exactly. Pinning BEFORE the distinct plans one
+    # exchange (the dedupe reuses the hash partitioning); the other
+    # order plans two, with the same rows.
     base = _pin_parallelism(
         esoa.select(F.col(text_col).alias("raw_text"))
-        .filter(F.col("raw_text").isNotNull() & (F.trim("raw_text") != ""))
-        .distinct(),
+        .filter(F.col("raw_text").isNotNull() & (F.trim("raw_text") != "")),
         "raw_text",
-    ).select(
+    ).distinct().select(
         "raw_text",
         normalize_text(F.col("raw_text")).alias("text_norm"),
         # native (whole-stage-codegen) twin of the Python extractor —
@@ -473,10 +463,10 @@ def _components(esoa: DataFrame, text_col: str, brand_b, mw_b, syn_b) -> DataFra
     # immediately while the registry's background count (exprcache)
     # runs the enrich job. The BlockManager's per-partition
     # compute-or-wait locking makes the race benign: whoever touches a
-    # partition first computes it, the other waits — keys.count() (the
-    # next blocking action) then pays only the not-yet-finished
-    # remainder instead of the full ~1.6 s enrich wall. A failed count
-    # resurfaces in checkpoint_count.
+    # partition first computes it, the other waits — the first
+    # downstream action pays only the not-yet-finished remainder
+    # instead of the full ~1.6 s enrich wall. A failed background count
+    # loses nothing: that action computes the partitions it missed.
     # r14: through the content-keyed registry (exprcache). When the
     # SAME corpus is re-tagged in one session (bench warm runs, batch
     # re-invocations), the pre-checkpoint plan is semantically stable —
@@ -512,7 +502,7 @@ def _persist(df: DataFrame, persisted: list[DataFrame]) -> DataFrame:
 def _token_matches(
     keys: DataFrame, generics_dim: DataFrame, synonyms_dim: DataFrame | None,
     brands_dim: DataFrame | None, mixtures_dim: DataFrame | None = None,
-    n_pairs_hint: int | None = None, *, persisted: list[DataFrame],
+    *, persisted: list[DataFrame],
 ) -> DataFrame:
     """Stage 3 for single tokens (the reference's single IN-list
     lookup + fallbacks, lookup.py:223-306): exact, synonym, singular
@@ -529,7 +519,10 @@ def _token_matches(
     the whole-tagger cost at 146K rows. Instead every tier probes
     ``keys`` INDEPENDENTLY (all broadcast joins, one pass over the
     fact side) and a final per-(raw_text, key) argmin over tier_order
-    keeps exactly the rows the miss-cascade would have kept."""
+    keeps exactly the rows the miss-cascade would have kept.
+
+    ``keys`` holds one row per (raw_text, key) with ``is_combo``; a
+    ``brands_dim`` is the pre-stripped (bkey, target_key) relation."""
     # ``is_combo`` marks COMBINATION-key probes (r9): the reference's
     # cache (batch_lookup_generics) treats every unique string the
     # same — exact/prefix/fuzzy — so combo keys ride those tiers, but
@@ -540,8 +533,6 @@ def _token_matches(
     # below (regression-caught by the differential: the normalized
     # combo key 'AMOXICILLIN + CLAVULANIC ACID' word-contained the
     # single generic and stole the win from the mixture).
-    if "is_combo" not in keys.columns:
-        keys = keys.withColumn("is_combo", F.lit(False))
     keys = _persist(keys, persisted)  # probed by every tier
     keys_tok = keys.filter(~F.col("is_combo"))
     # reference_text = the dim row's raw text (unified.reference_text)
@@ -607,17 +598,8 @@ def _token_matches(
         # target_key) relation computed driver-side through the full
         # reference chain (pure-salt + multiword guard + single-strip,
         # tagger.py:302-307) — the guards need the collected multiword
-        # set, which only the caller holds; a raw brands dim falls
-        # back to the unguarded strip.
-        if "target_key" in brands_dim.columns:
-            br = F.broadcast(brands_dim.select("bkey", "target_key"))
-        else:
-            br = F.broadcast(
-                brands_dim.select(
-                    F.lower("brand_name").alias("bkey"),
-                    F.lower(strip_salt_suffix(F.col("generic_name"))).alias("target_key"),
-                )
-            )
+        # set, which only the caller holds.
+        br = F.broadcast(brands_dim.select("bkey", "target_key"))
         # token-origin keys only (r9): the reference's brand→generic
         # swap is a TOKENIZE-TIME step (_swap_brand per token,
         # tagger.py:624-647), never a cache probe — a space-joined
@@ -634,42 +616,23 @@ def _token_matches(
         )
 
     # The three fallback tiers below (prefix / multiword-containment /
-    # fuzzy) are the EXPENSIVE probes — and their candidate choice
-    # depends ONLY on the key, never on which text carried it. Above
-    # _PER_DISTINCT_MIN_PAIRS, probe per DISTINCT key and join the
-    # resolved hits back to the (raw_text, key) relation — the
-    # reference's own shape (batch_lookup_generics caches per unique
-    # token, tagger.py:700). Without this the fuzzy scorer ran once
-    # per (text, candidate): r6-measured 21.9M pure-Python ratio calls
-    # (2,260 CPU-s) at 155K texts vs ~0.3M per-distinct-key.
-    # Below the gate the r5 per-pair shape is kept: the distinct-key
-    # rework carries a fixed cost (dkeys shuffle + three hits
-    # materializations + the join-backs) that only pays for itself
-    # once the pair relation is large — the same size-gate pattern as
-    # _PERSIST_MIN_DOCS / _SEMI_FILTER_MIN_DOCS / VOCAB_BROADCAST_MAX_
-    # DOCS. Both shapes are row-identical — the per-key top-3 windows
-    # order on key-determined columns only, so slicing per
-    # (raw_text, key) or per key then joining back keeps the same
-    # rows (pinned by test_fallback_probe_gate_parity).
-    #
-    # ``n_pairs_hint`` (r11): the caller passes an ESTIMATE (2× its
-    # doc count — pairs per doc run 2-3 on every measured corpus) so
-    # this gate stops being a blocking mid-build shuffle action
-    # (keys.count() cost ~3 AQE jobs and serialized plan construction
-    # against executor work). The estimate only picks a physical
-    # shape, never rows, and the measured crossover is broad and flat
-    # (5K-50K pairs), so landing a factor of ~2 off the true pair
-    # count stays inside the measured-equal band.
-    n_pairs = n_pairs_hint if n_pairs_hint is not None else keys.count()
-    per_distinct = n_pairs >= _PER_DISTINCT_MIN_PAIRS
-    if per_distinct:
-        # _pin_parallelism: dkeys is small-bytes/high-CPU, exactly
-        # what AQE would collapse to one partition.
-        probe = _persist(_pin_parallelism(keys.select("key").distinct(), "key"), persisted)
-        wkey = ["key"]
-    else:
-        probe = keys
-        wkey = ["raw_text", "key"]
+    # fuzzy) are the EXPENSIVE probes, and their candidates depend
+    # ONLY on the key, never on which text carried it. So they probe
+    # each DISTINCT key once, and one join hands the hits back to the
+    # (raw_text, key) pairs: the reference's own shape
+    # (batch_lookup_generics caches per unique string, tagger.py:
+    # 700-705). Per pair, the fuzzy scorer ran once per (text,
+    # candidate): r6 measured 21.9M pure-Python ratio calls (2,260
+    # CPU-s) at 155K texts against ~0.3M per distinct key. Two origin
+    # flags carry the per-pair rules over to the key: the brand
+    # short-circuit and the multiword tier apply to token-origin pairs
+    # only. _pin_parallelism first, then aggregate: one exchange, and
+    # the probe is small-bytes/high-CPU, exactly what AQE would
+    # collapse to one partition.
+    probe = _pin_parallelism(keys, "key").groupBy("key").agg(
+        F.max(~F.col("is_combo")).alias("has_tok"),
+        F.max("is_combo").alias("has_combo"),
+    )
 
     # Tier-0 short-circuit (r9): a key resolved by ANY tier-0 probe
     # (exact / synonym / singular / brand) can never keep a fallback
@@ -700,27 +663,16 @@ def _token_matches(
         _singular_key(fb.key) == F.col("_sg"), "left_anti",
     )
     if brands_dim is not None:
-        # brand hits exist for TOKEN-origin keys only (the brand tier
-        # is keys_tok), so only those keys short-circuit — a combo key
-        # that merely collides with a brand name keeps its fallback
-        # eligibility (the reference probes it through prefix/fuzzy
-        # like any cache key)
+        # brand hits exist for TOKEN-origin pairs only (the brand tier
+        # is keys_tok), so a brand-resolved key stays in the probe
+        # while some pair probes it as a combination key (the
+        # reference probes that string through prefix/fuzzy like any
+        # cache key); its token-origin pairs keep their tier-0 row
         br_resolved = F.broadcast(
             br.join(g, F.col("target_key") == F.col("gkey"), "left_semi")
             .select("bkey")
         )
-        if per_distinct:
-            tok_brand_keys = (
-                keys_tok.select("key").distinct()
-                .join(br_resolved, F.col("key") == F.col("bkey"), "left_semi")
-            )
-            fb = fb.join(tok_brand_keys, "key", "left_anti")
-        else:
-            fb = fb.join(
-                br_resolved,
-                (fb.key == F.col("bkey")) & (~fb.is_combo),
-                "left_anti",
-            )
+        fb = fb.join(br_resolved, (fb.key == F.col("bkey")) & ~fb.has_combo, "left_anti")
     # persist, NOT localCheckpoint: an r9 A/B on the sf0.1 tagger
     # headline measured the eager checkpoint job costing MORE than the
     # plan-size copies it saves (cold 28.1 s vs 23.5 s, warm 15.6 vs
@@ -728,26 +680,26 @@ def _token_matches(
     # the lesson-#3 collapse does not pay here
     fb = _persist(fb, persisted)  # probed by all three fallback tiers
 
-    def back(hits: DataFrame) -> DataFrame:
-        # Scale note: this join-back carries NO broadcast hint on
-        # purpose. The hits side is bounded by |distinct keys| — a
-        # text-derived vocabulary that grows with the corpus (Heaps'
-        # law), the same reason the tf-idf/rare-token vocab broadcasts
-        # are gated (retrieval.py / textstats.py). AQE converts the
-        # shuffle join to a runtime broadcast whenever the hits side
-        # is actually small (always, at test/production-differential
-        # volumes), while at 100 TB a multi-GB hits relation degrades
-        # to a sort-merge join instead of OOMing the driver.
-        return keys.join(hits, "key") if per_distinct else hits
+    def top(hits: DataFrame, n: int, *order) -> DataFrame:
+        w = W.partitionBy("key").orderBy(*order)
+        return hits.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= n)
+
+    def per_key(hits: DataFrame, order: int, priority: int, reason: str,
+                tok_only: bool = False) -> DataFrame:
+        return hits.select(
+            "key", "generic_name", "drugbank_id", "reference_text", "sources",
+            F.lit(order).alias("tier_order"),
+            F.lit(priority).alias("match_priority"),
+            F.lit(reason).alias("match_reason"),
+            F.lit(tok_only).alias("tok_only"),
+        )
 
     # Prefix tier (lookup.py:287-295): dim name starts with "<token> "
     # — catches salt-suffixed dims ('amoxicillin' → 'AMOXICILLIN
     # TRIHYDRATE', fuzzy ratio ~67 would miss it). Reference keeps
     # LIMIT 3 ordered by length; same top-3 here.
     pref = fb.join(g, F.col("gkey").startswith(F.concat(fb.key, F.lit(" "))))
-    wp = W.partitionBy(*wkey).orderBy(F.asc(F.length("gkey")), F.asc("gkey"))
-    pref_hits = pref.withColumn("rn", F.row_number().over(wp)).filter(F.col("rn") <= 3)
-    tiers.append(tier(back(pref_hits), 4, PRIORITY_PREFIX, "prefix"))
+    pref_hits = top(pref, 3, F.asc(F.length("gkey")), F.asc("gkey"))
 
     # Multiword-containment tier (reference extract_generic_tokens'
     # multiword matching, tokenizer.py:1113-1200): a multiword dim
@@ -757,15 +709,10 @@ def _token_matches(
     # as an exact token; fuzzy would miss once the junk outweighs the
     # name). Bounded like prefix: |distinct keys| × |multiword dim
     # names| broadcast probe; longest (most specific) names first.
-    # TOKEN-ORIGIN keys only (r9): this tier models tokenize-time
+    # TOKEN-ORIGIN pairs only (r9): this tier models tokenize-time
     # behavior, which combination keys never receive.
     mwg = g.filter(F.col("gkey").contains(" "))
-    if per_distinct:
-        fb_mw = fb.join(keys_tok.select("key").distinct(), "key", "left_semi")
-        back_mw = lambda hits: keys_tok.join(hits, "key")  # noqa: E731
-    else:
-        fb_mw = fb.filter(~F.col("is_combo"))
-        back_mw = lambda hits: hits  # noqa: E731
+    fb_mw = fb.filter("has_tok")
     cont = fb_mw.join(
         mwg,
         (fb_mw.key != F.col("gkey"))
@@ -773,9 +720,7 @@ def _token_matches(
             F.concat(F.lit(" "), F.col("gkey"), F.lit(" "))
         ),
     )
-    wm = W.partitionBy(*wkey).orderBy(F.desc(F.length("gkey")), F.asc("gkey"))
-    cont_hits = cont.withColumn("rn", F.row_number().over(wm)).filter(F.col("rn") <= 3)
-    tiers.append(tier(back_mw(cont_hits), 5, PRIORITY_TOKEN, "multiword"))
+    cont_hits = top(cont, 3, F.desc(F.length("gkey")), F.asc("gkey"))
 
     # Fuzzy tier: length-band blocking only — lossless for ratio ≥ 85
     # (|len a − len b| ≤ 0.15·(len a + len b) is implied by the
@@ -790,11 +735,24 @@ def _token_matches(
     scored = blocked.withColumn("ratio", fuzz_ratio("key", "gkey")).filter(
         F.col("ratio") >= FUZZY_MIN_RATIO
     )
-    w = W.partitionBy(*wkey).orderBy(
-        F.desc("ratio"), F.asc(F.length("gkey")), F.asc("gkey")
+    fuzzy_hits = top(scored, 1, F.desc("ratio"), F.asc(F.length("gkey")), F.asc("gkey"))
+
+    # One join-back for the three tiers. Scale note: it carries NO
+    # broadcast hint on purpose. The hits side is bounded by |distinct
+    # keys| — a text-derived vocabulary that grows with the corpus
+    # (Heaps' law), the same reason the tf-idf/rare-token vocab
+    # broadcasts are gated (retrieval.py / textstats.py). AQE converts
+    # the shuffle join to a runtime broadcast whenever the hits side is
+    # actually small (always, at test/production-differential
+    # volumes), while at 100 TB a multi-GB hits relation degrades to a
+    # sort-merge join instead of OOMing the driver.
+    hits = (
+        per_key(pref_hits, 4, PRIORITY_PREFIX, "prefix")
+        .unionByName(per_key(cont_hits, 5, PRIORITY_TOKEN, "multiword", tok_only=True))
+        .unionByName(per_key(fuzzy_hits, 6, PRIORITY_FUZZY, "fuzzy"))
     )
-    fuzzy_hits = scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    tiers.append(tier(back(fuzzy_hits), 6, PRIORITY_FUZZY, "fuzzy"))
+    back = keys.join(hits, "key").filter(~(F.col("tok_only") & F.col("is_combo")))
+    tiers.append(back.select(*tiers[0].columns))
 
     if synonyms_dim is not None and mixtures_dim is not None:
         # Mixture-name synonym fallback (reference tagger.py:783-804):
@@ -1341,12 +1299,9 @@ def _tag_descriptions_impl(
                 "bkey string, target_key string",
             ),
         )
-    # gate hint: docs is a (lazily materializing) checkpoint leaf —
-    # reuse the registry's background count instead of running a
-    # second count job mid-build (a failed count resurfaces here).
     token_hits = _persist(_token_matches(
         keys, generics_dim, synonyms_dim, brands_targets, mixtures_dim,
-        n_pairs_hint=2 * checkpoint_count(docs), persisted=persisted,
+        persisted=persisted,
     ), persisted)
 
     # No synthesized ' + '-joined candidates: the reference never

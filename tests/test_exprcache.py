@@ -18,7 +18,6 @@ from pids_drg_esoa_spark.functions.exprcache import (
     cached_broadcast,
     cached_checkpoint,
     cached_value,
-    checkpoint_count,
 )
 from pids_drg_esoa_spark.functions.tokens import (
     normalize_generic_combination_native,
@@ -99,11 +98,16 @@ def test_eager_hit_on_lazy_entry_materializes(spark):
 
 
 def test_lazy_checkpoint_background_count(spark):
+    """A lazy registration materializes its leaf by itself: the
+    background count runs with no action from the caller."""
     leaf = cached_checkpoint(
         spark.range(123).select((F.col("id") * 7919).alias("v")), eager=False
     )
-    assert checkpoint_count(leaf) == 123
+    deadline = time.time() + 60
+    while not _is_materialized(leaf) and time.time() < deadline:
+        time.sleep(0.1)
     assert _is_materialized(leaf)
+    assert leaf.count() == 123
 
 
 def test_app_change_drops_entries(spark, monkeypatch):

@@ -269,24 +269,47 @@ def test_concurrent_runner_matches_sequential_flow(spark, flow_inputs, monkeypat
 def test_run_releases_the_tagger_intermediates(spark, flow_inputs, monkeypatch):
     """run_drugs_all reads the tag pass through its eager leaf, so once
     it returns none of the tagger's persisted intermediates is still
-    cached: repeated runs in one session do not pile them up."""
+    cached, and neither are the tag leaf and the two Part-4 sides, which
+    only the run's later leaves read: repeated runs in one session do
+    not pile them up."""
     from pids_drg_esoa_spark.pipelines import runner
 
-    calls = []
+    def spying(name):
+        calls = []
 
-    def spy(*args, _real=runner.tag_descriptions, **kwargs):
-        calls.append(_real(*args, **kwargs))
-        return calls[-1]
+        def spy(*args, _real=getattr(runner, name), **kwargs):
+            calls.append(_real(*args, **kwargs))
+            return calls[-1]
 
-    monkeypatch.setattr(runner, "tag_descriptions", spy)
+        monkeypatch.setattr(runner, name, spy)
+        return calls
+
+    plans, annex_sides, esoa_sides = (
+        spying(n) for n in ("tag_descriptions", "annex_bridge_side", "esoa_bridge_side")
+    )
+    leaves = {}
+    frame_type = type(spark.range(1))
+
+    def local_checkpoint(self, *args, _real=frame_type.localCheckpoint, **kwargs):
+        leaves[id(self)] = _real(self, *args, **kwargs)
+        return leaves[id(self)]
+
+    monkeypatch.setattr(frame_type, "localCheckpoint", local_checkpoint)
     runner.run_drugs_all(spark, flow_inputs)
-    (tagged,) = calls
+    (tagged,) = plans
     assert tagged.persisted_intermediates
     still_cached = [
         df for df in tagged.persisted_intermediates
         if df.storageLevel.useMemory or df.storageLevel.useDisk
     ]
     assert still_cached == []
+
+    def rdd_id(leaf):
+        return leaf._jdf.queryExecution().analyzed().rdd().id()
+
+    released = [rdd_id(leaves[id(tagged)]), rdd_id(*annex_sides), rdd_id(*esoa_sides)]
+    persistent = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    assert persistent.isdisjoint(released)
 
 
 def test_run_jobs_carry_the_callers_job_group(spark, flow_inputs):

@@ -4,6 +4,7 @@ preference, best-candidate selection, reason labels."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 
 from pids_drg_esoa_spark.plans.tagger import tag_descriptions
@@ -575,42 +576,108 @@ def test_combo_key_fuzzy_reaches_combination_dim(spark, dims):
     assert row.atc_primary == "J01CR02"
 
 
-def test_fallback_probe_gate_parity(spark, dims, monkeypatch):
-    """The two fallback probe shapes (per-pair below
-    _PER_DISTINCT_MIN_PAIRS, per-distinct-key above) are
-    row-identical: the per-key top-3 windows order on key-determined
-    columns only, so slicing per (raw_text, key) or per key then
-    joining back keeps the same rows. Forced both ways over a corpus
-    that exercises prefix, multiword, and fuzzy tiers."""
-    from pids_drg_esoa_spark.plans import tagger as T
-
+def test_fallback_corpus_golden(spark, dims):
+    """A corpus whose keys reach the fallback probe (which probes each
+    distinct key once and joins the hits back to the texts) next to
+    keys that tier 0 resolves first. Golden values: the per-pair probe
+    this shape replaced gave the same rows."""
     texts = [
         "amoxicilin 500mg cap",          # fuzzy
-        "sodium chloride usp 0.9%",      # multiword containment
-        "amoxicillin trihydrate 250mg",  # prefix-reachable
+        "sodium chloride usp 0.9%",      # junk stripped before the probe: exact
+        "amoxicillin trihydrate 250mg",  # salt stripped before the probe: exact
         "paracetamol 500mg tab",         # exact (control)
-        "setirizine 10mg",               # fuzzy miss (no dim) control
+        "setirizine 10mg",               # fuzzy miss (no dim)
     ]
-    esoa = spark.createDataFrame([(t,) for t in texts], "raw_text string")
+    out = _tag(spark, dims, texts)
+    assert {t: (out[t].generic_name, out[t].match_reason) for t in texts} == {
+        "amoxicilin 500mg cap": ("AMOXICILLIN", "fuzzy"),
+        "sodium chloride usp 0.9%": ("SODIUM CHLORIDE", "exact"),
+        "amoxicillin trihydrate 250mg": ("AMOXICILLIN", "exact"),
+        "paracetamol 500mg tab": ("PARACETAMOL", "exact"),
+        "setirizine 10mg": ("SETIRIZINE", "no_candidates"),
+    }
 
-    def _freeze(v):
-        return tuple(v) if isinstance(v, list) else v
 
-    def run():
-        tagged = tag_descriptions(esoa, **dims)
-        rows = {
-            tuple(sorted((k, _freeze(v)) for k, v in r.asDict().items()))
-            for r in tagged.collect()
-        }
-        for p in tagged.persisted_intermediates:
-            p.unpersist()
-        return rows
+def test_fallback_probe_keeps_mixed_origin_pairs_apart(spark):
+    """Keys that one text probes as a token and another as a
+    combination key: the brand short-circuit and the multiword tier act
+    on token-origin pairs only. So the token pair keeps its brand row
+    while the combination pair still reaches the prefix tier, and only
+    the token pair of a junk-bearing key gets the multiword hit."""
+    from pids_drg_esoa_spark.plans.tagger import _token_matches
 
-    monkeypatch.setattr(T, "_PER_DISTINCT_MIN_PAIRS", 10**9)  # force per-pair
-    small = run()
-    monkeypatch.setattr(T, "_PER_DISTINCT_MIN_PAIRS", 0)  # force per-distinct
-    large = run()
-    assert small == large and len(small) == len(texts)
+    keys = spark.createDataFrame(
+        [
+            ("t1", "sinecod forte", False), ("t2", "sinecod forte", True),
+            ("t3", "sodium chloride usp", False), ("t4", "sodium chloride usp", True),
+        ],
+        "raw_text string, key string, is_combo boolean",
+    )
+    generics = spark.createDataFrame(
+        [
+            ("BUTAMIRATE", "DB01", None), ("SINECOD FORTE SYRUP", "DB02", None),
+            ("SODIUM CHLORIDE", "DB03", None),
+        ],
+        "generic_name string, drugbank_id string, reference_text string",
+    )
+    brands = spark.createDataFrame(
+        [("sinecod forte", "butamirate")], "bkey string, target_key string"
+    )
+    persisted = []
+    rows = _token_matches(keys, generics, None, brands, persisted=persisted).collect()
+    for p in persisted:
+        p.unpersist()
+    assert sorted((r.raw_text, r.generic_name, r.match_reason) for r in rows) == [
+        ("t1", "BUTAMIRATE", "brand"),
+        ("t2", "SINECOD FORTE SYRUP", "prefix"),
+        ("t3", "SODIUM CHLORIDE", "multiword"),
+        ("t4", "SODIUM CHLORIDE", "fuzzy"),  # ratio 88
+    ]
+
+
+def test_fuzzy_scores_each_distinct_key_once(spark, dims, monkeypatch):
+    """The fuzzy scorer sees each distinct key once per band
+    candidate, however many texts carry the key: 30 texts sharing one
+    misspelt token cost the scorer what one text costs."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as ST
+
+    from pids_drg_esoa_spark.functions.fuzzy import fuzz_ratio_py
+    from pids_drg_esoa_spark.plans import tagger as T
+
+    def scored_rows(texts):
+        acc = spark.sparkContext.accumulator(0)
+
+        @F.pandas_udf(ST.DoubleType())
+        def counting_ratio(a: pd.Series, b: pd.Series) -> pd.Series:
+            acc.add(len(a))
+            return pd.Series([fuzz_ratio_py(x, y) for x, y in zip(a, b)])
+
+        monkeypatch.setattr(T, "fuzz_ratio", counting_ratio.asNondeterministic())
+        out = _tag(spark, dims, texts)
+        assert {out[t].match_reason for t in texts} == {"fuzzy"}
+        return acc.value
+
+    one = scored_rows(["amoxicilin 500mg cap"])
+    many = scored_rows([f"amoxicilin {n}mg cap" for n in range(100, 130)])
+    assert 0 < one == many
+
+
+def test_components_pins_then_dedupes_in_one_exchange(spark, monkeypatch):
+    """The text dedupe reuses the parallelism pin's hash partitioning,
+    so the doc relation plans ONE exchange (dedupe-then-pin plans
+    two, with the same rows)."""
+    from pids_drg_esoa_spark.plans import tagger as T
+
+    monkeypatch.setattr(T, "cached_checkpoint", lambda df, eager=True: df)
+    sc = spark.sparkContext
+    esoa = spark.createDataFrame(
+        [("paracetamol 500mg tab",), ("paracetamol 500mg tab",), ("amlodipine 5mg",)],
+        "raw_text string",
+    )
+    docs = T._components(esoa, "raw_text", sc.broadcast({}), sc.broadcast([]), sc.broadcast({}))
+    plan = docs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
 def test_multiword_bare_substring_typo_combo(spark):
