@@ -372,7 +372,7 @@ def _components(esoa: DataFrame, text_col: str, brand_b, mw_b, syn_b) -> DataFra
         "tagger_doc_enrich", _broadcast_key(brand_b, mw_b, syn_b),
         lambda: _make_doc_enrich(brand_b, mw_b, syn_b),
     )
-    # Explicit repartition, then the dedupe (_pin_parallelism):
+    # Explicit repartition after the dedupe shuffle (_pin_parallelism):
     # AQE's coalescing is BYTE-based (parallelismFirst still coalesces
     # below minPartitionSize), and 155K distinct short texts compress
     # under 1 MB — so without this, AQE collapses the stage to ONE
@@ -384,14 +384,13 @@ def _components(esoa: DataFrame, text_col: str, brand_b, mw_b, syn_b) -> DataFra
     # combination-twin / form expressions embed thousands of vocab
     # literals, and each of the former 15 withColumns re-analyzed the
     # whole tree — pure driver time. Column names and order reproduce
-    # the former chain exactly. Pinning BEFORE the distinct plans one
-    # exchange (the dedupe reuses the hash partitioning); the other
-    # order plans two, with the same rows.
+    # the former chain exactly.
     base = _pin_parallelism(
         esoa.select(F.col(text_col).alias("raw_text"))
-        .filter(F.col("raw_text").isNotNull() & (F.trim("raw_text") != "")),
+        .filter(F.col("raw_text").isNotNull() & (F.trim("raw_text") != ""))
+        .distinct(),
         "raw_text",
-    ).distinct().select(
+    ).select(
         "raw_text",
         normalize_text(F.col("raw_text")).alias("text_norm"),
         # native (whole-stage-codegen) twin of the Python extractor —

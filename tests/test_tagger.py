@@ -588,8 +588,14 @@ def test_fallback_corpus_golden(spark, dims):
         "paracetamol 500mg tab",         # exact (control)
         "setirizine 10mg",               # fuzzy miss (no dim)
     ]
-    out = _tag(spark, dims, texts)
-    assert {t: (out[t].generic_name, out[t].match_reason) for t in texts} == {
+    tagged = tag_descriptions(
+        spark.createDataFrame([(t,) for t in texts], "raw_text string"), **dims
+    )
+    rows = tagged.collect()
+    for p in tagged.persisted_intermediates:
+        p.unpersist()
+    assert len(rows) == len(texts)  # one row per text: the join-back fans out nothing
+    assert {r.raw_text: (r.generic_name, r.match_reason) for r in rows} == {
         "amoxicilin 500mg cap": ("AMOXICILLIN", "fuzzy"),
         "sodium chloride usp 0.9%": ("SODIUM CHLORIDE", "exact"),
         "amoxicillin trihydrate 250mg": ("AMOXICILLIN", "exact"),
@@ -661,23 +667,6 @@ def test_fuzzy_scores_each_distinct_key_once(spark, dims, monkeypatch):
     one = scored_rows(["amoxicilin 500mg cap"])
     many = scored_rows([f"amoxicilin {n}mg cap" for n in range(100, 130)])
     assert 0 < one == many
-
-
-def test_components_pins_then_dedupes_in_one_exchange(spark, monkeypatch):
-    """The text dedupe reuses the parallelism pin's hash partitioning,
-    so the doc relation plans ONE exchange (dedupe-then-pin plans
-    two, with the same rows)."""
-    from pids_drg_esoa_spark.plans import tagger as T
-
-    monkeypatch.setattr(T, "cached_checkpoint", lambda df, eager=True: df)
-    sc = spark.sparkContext
-    esoa = spark.createDataFrame(
-        [("paracetamol 500mg tab",), ("paracetamol 500mg tab",), ("amlodipine 5mg",)],
-        "raw_text string",
-    )
-    docs = T._components(esoa, "raw_text", sc.broadcast({}), sc.broadcast([]), sc.broadcast({}))
-    plan = docs._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
 def test_multiword_bare_substring_typo_combo(spark):
