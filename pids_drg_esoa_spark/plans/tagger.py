@@ -379,7 +379,10 @@ def _components(esoa: DataFrame, text_col: str, brand_b, mw_b, syn_b) -> DataFra
     # partition and the expensive Python enrichment below runs
     # single-threaded (r6 measured at 155K texts: the enrich stage
     # alone 46-49 s on one core vs 4.7 s pinned wide; AQE cannot see
-    # Python CPU, only shuffle bytes).
+    # Python CPU, only shuffle bytes). Dedupe BEFORE the pin: pinning
+    # first plans one exchange instead of two but shuffles every input
+    # row, and eSOA inputs repeat texts (3M rows over 146K texts:
+    # 17.7 MB shuffled pinned-first vs 4.2 MB deduped-first).
     # STAGED selects, not a withColumn chain (r11): the normalize /
     # combination-twin / form expressions embed thousands of vocab
     # literals, and each of the former 15 withColumns re-analyzed the
