@@ -176,7 +176,7 @@ def main(argv: list[str] | None = None) -> int:
     if argv and argv[0] == "drugs-all":
         return drugs_all_main(argv[1:])
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("--item-ref-code", required=True)
+    ap.add_argument("--item-ref-code", required=True, choices=sorted(PIPELINE_INPUTS))
     ap.add_argument("--inputs-dir", required=True)
     ap.add_argument("--output-dir", required=True)
     ap.add_argument("--cpus", type=int, default=None)

@@ -51,7 +51,6 @@ from .dedup import (
     _verified_pairs_core,
     band_signature,
     distinct_text_reps,
-    force_wide,
     minhash_signature,
     minhash_verified_pairs,
     verify_jaccard,
@@ -579,7 +578,6 @@ def sparsified_verified_components(
     docs: DataFrame,
     text_col: str,
     id_col: str,
-    n_parts: int | None = None,
     max_rounds: int = 30,
     escalation_budget: int = _ESCALATION_BUDGET,
     verify: str = "auto",
@@ -619,7 +617,7 @@ def sparsified_verified_components(
     Both count the intersection of DISTINCT shingles; 'arrays'
     compares 128-bit md5s of the shingles rather than the raw strings
     (the same hash the banding scheme already rests on)."""
-    sh = word_shingles(docs, text_col, id_col, 3, n_parts=n_parts).persist()
+    sh = word_shingles(docs, text_col, id_col, 3).persist()
     sig = minhash_signature(sh).persist()
     caches = [sh, sig]
     banded = band_signature(sig).persist()
@@ -782,16 +780,13 @@ def cluster_assign_docs(
     still consumes)."""
     member, rep_docs = distinct_text_reps(d, text_col, id_col)
     member = member.persist()  # consumed by components' edge build + final expansion
-    # force_wide before persist (r11 ADVICE): AQE byte-coalescing can
-    # hand the CPU-dense shingle stages a one-partition rep relation
-    rep_docs = force_wide(rep_docs, "doc").persist()
-    sc = d.sparkSession.sparkContext
+    rep_docs = rep_docs.persist()
     caches: list[DataFrame] = [rep_docs]
     if sparsified:
 
         def comp_fn():
             labels, inner = sparsified_verified_components(
-                rep_docs, "text", "doc", n_parts=sc.defaultParallelism,
+                rep_docs, "text", "doc",
                 escalation_budget=escalation_budget, verify=verify,
                 on_budget_exceeded=on_budget_exceeded, stats_out=stats_out,
             )
@@ -801,9 +796,7 @@ def cluster_assign_docs(
         # flat path: same core as dedup's pair operator — same
         # banding, threshold, AND scale gating
         def comp_fn():
-            verified, _, inner = _verified_pairs_core(
-                rep_docs, "text", "doc", n_docs, n_parts=sc.defaultParallelism
-            )
+            verified, _, inner = _verified_pairs_core(rep_docs, "text", "doc", n_docs)
             caches.extend(inner)
             return connected_components(verified.select("doc_a", "doc_b"))
 

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import table
 from ..plans.catalog import register
+from ..session import pin_parallelism
 
 N_HASHES = 8
 N_BANDS = 4  # rows-per-band r=2 → P(candidate) = 1-(1-j^2)^4
@@ -40,33 +41,16 @@ _SEMI_FILTER_MIN_DOCS = 100_000
 # ---------------------------------------------------------------------------
 # Reusable operator functions (DataFrame in → DataFrame out)
 # ---------------------------------------------------------------------------
-def word_shingles(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3, n_parts: int | None = None
-) -> DataFrame:
+def word_shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document: (id, sh).
-    Narrow (explode) — no shuffle at scale; shingling scales linearly.
 
-    Small-input parallelism pin (r10): a corpus read from one small
-    parquet file arrives as ONE partition, and the shingle explode +
-    the downstream 8×md5 signature pass are CPU-heavy per byte — the
-    sf0.1 bench measured the two scan-chain stages running 2.3 s and
-    1.6 s on a single core while 31 sat idle (AQE only reasons about
-    bytes). Widening is gated on the CURRENT partition count, so a
-    production-scale input (partitions ≥ cores) never pays the extra
-    shuffle — same rule as the tagger's _pin_parallelism.
-
-    ``n_parts``: caller-known partition count of ``df``. The default
-    probe (``df.rdd.getNumPartitions()``) converts the plan to an RDD
-    on every call — and under AQE a plan containing an exchange will
-    EXECUTE its shuffle stages during that conversion — so callers
-    whose input already sits at known width (a groupBy output at
-    spark.sql.shuffle.partitions, a repartitioned batch loop) should
-    pass it and skip the probe entirely (r10 judge nit)."""
-    sc = df.sparkSession.sparkContext
-    if n_parts is None:
-        n_parts = df.rdd.getNumPartitions()
-    if n_parts < sc.defaultParallelism:
-        df = df.repartition(sc.defaultParallelism, F.col(id_col))
+    The input is first pinned wide on ``id_col`` (``pin_parallelism``):
+    the shingle explode and the downstream 8×md5 signature pass are
+    CPU-heavy per byte, and a corpus read from one small parquet file,
+    or a rep relation that AQE coalesced by bytes, arrives on ONE
+    partition (r10: the sf0.1 bench measured the two scan-chain stages
+    at 2.3 s and 1.6 s on a single core while 31 sat idle)."""
+    df = pin_parallelism(df, id_col)
     toks = F.split(F.col(text_col), " ")
     idx = F.when(
         F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
@@ -81,43 +65,6 @@ def word_shingles(
         )
         .distinct()
     )
-
-
-def force_wide(df: DataFrame, *cols: str) -> DataFrame:
-    """Unconditional hash-repartition to max(2× cluster parallelism,
-    session shuffle partitions) — never narrower than the session's
-    configured shuffle width (r12 ADVICE: a session built with
-    shuffle_partitions well above 2×cores would otherwise have its
-    rep relation narrowed BELOW session width here).
-
-    The explicit count is what defeats AQE byte-coalescing: on the
-    pinned Spark (4.1.2, probed empirically — an explicit
-    repartition(N, col) keeps N even when N == spark.sql.shuffle.
-    partitions, while repartition(col) without a count coalesced to 1
-    on the same relation) a user-specified partition count is a
-    REPARTITION_BY_NUM shuffle AQE never coalesces, so no count
-    adjustment dodge is needed.
-
-    Why unconditional and not a width probe: the collapsed minhash
-    path feeds a groupBy output (rep_docs) into the CPU-dense
-    shingle/signature stages, and session.py enables
-    spark.sql.adaptive.coalescePartitions — which coalesces that
-    exchange BY BYTES, so a small-bytes/high-CPU rep relation can land
-    on one partition at runtime no matter what width the static plan
-    claims (r11 ADVICE: asserting width via the n_parts hint silently
-    disabled word_shingles' widening and re-introduced the one-core
-    shingle pathology). A probe (df.rdd.getNumPartitions()) would
-    EXECUTE the groupBy's shuffle at plan-build time under AQE, so the
-    only sound shape is an explicit post-groupBy repartition; it costs
-    one exchange of the distinct-text relation (small by
-    construction) and makes the downstream n_parts hint truthful."""
-    spark_ = df.sparkSession
-    n_part = 2 * spark_.sparkContext.defaultParallelism
-    try:
-        n_part = max(n_part, int(spark_.conf.get("spark.sql.shuffle.partitions")))
-    except (TypeError, ValueError):
-        pass
-    return df.repartition(n_part, *[F.col(c) for c in cols])
 
 
 def minhash_signature(shingles: DataFrame) -> DataFrame:
@@ -350,7 +297,6 @@ def _verified_pairs_core(
     text_col: str,
     id_col: str,
     n_docs: int,
-    n_parts: int | None = None,
 ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
     """Generate-and-verify on the given docs: shingle → signature →
     banded candidates → exact Jaccard ≥ 2/3 (integer compare).
@@ -370,7 +316,7 @@ def _verified_pairs_core(
     counts (judge-measured r4: 3.6 s → 7.3 s at 5K docs), so below
     _SEMI_FILTER_MIN_DOCS the verify join reads the unfiltered
     shingle relation: identical output, fewer stages."""
-    sh = word_shingles(docs, text_col, id_col, 3, n_parts=n_parts).persist()
+    sh = word_shingles(docs, text_col, id_col, 3).persist()
     sig = minhash_signature(sh).persist()
     caches: list[DataFrame] = [sh, sig]
     if n_docs >= _SEMI_FILTER_MIN_DOCS:
@@ -432,16 +378,9 @@ def minhash_verified_pairs(
         return verified, caches
     member, rep_docs = distinct_text_reps(docs, text_col, id_col)
     member = member.persist()  # 4 consumers: cross ×2, within ×2
-    # force_wide BEFORE persist: the cached rep relation must already
-    # sit at cluster width or AQE's byte-based coalescing hands the
-    # CPU-dense shingle/signature stages one partition (r11 ADVICE);
-    # the n_parts hint below is truthful only because of this.
-    rep_docs = force_wide(rep_docs, "doc").persist()
+    rep_docs = rep_docs.persist()
     caches = [member, rep_docs]
-    sc = docs.sparkSession.sparkContext
-    rep_verified, rep_sizes, rep_caches = _verified_pairs_core(
-        rep_docs, "text", "doc", n_docs, n_parts=sc.defaultParallelism
-    )
+    rep_verified, rep_sizes, rep_caches = _verified_pairs_core(rep_docs, "text", "doc", n_docs)
     caches += rep_caches
     rep_verified = rep_verified.persist()  # feeds the two-join expansion
     caches.append(rep_verified)

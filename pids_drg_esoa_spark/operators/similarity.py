@@ -21,6 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..plans.catalog import register
+from ..session import pin_parallelism
 from ..sources.tables import table
 
 QUANT = 10_000
@@ -144,20 +145,6 @@ def _kmeans_cell_expr(cents: list[list[int]]) -> Column:
     return F.expr(f"-array_max(array({structs})).nj").alias("cell")
 
 
-def _pin_wide(df: DataFrame, *cols: str) -> DataFrame:
-    """Repartition a small-bytes/high-CPU relation to cluster width
-    when it currently sits below it (same rule as the tagger's
-    _pin_parallelism and word_shingles' pin): AQE coalesces by BYTES,
-    so a 20K-vector relation from one parquet file lands on ONE
-    partition and every n×k dot-product scan built on it runs
-    single-core while 31 idle (r11 scale-point catch: the k=400
-    SemDeDup Lloyd pass measured 218 s one-core vs ~4 s pinned)."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        df = df.repartition(sc.defaultParallelism, *[F.col(c) for c in cols])
-    return df
-
-
 def _kmeans_cell_join(v: DataFrame, cents: list[list[int]]) -> DataFrame:
     """Nearest-centroid assignment via a broadcast centroid dim —
     the LARGE-k path. The literal-centroid expression compiles k×d
@@ -227,13 +214,14 @@ def kmeans_fit(
     # scans are small-bytes/high-CPU — exactly what AQE coalesces to
     # one core — and at production k (join path) a one-partition
     # input serialized the k=400 Lloyd pass to 218 s. The literal
-    # path (k≤64, demo/oracle scale) measured the OPPOSITE: the pin's
-    # probe+shuffle cost ~0.6 s against nothing saved
-    # (ann_ivf_kmeans_topk isolated warm 1.6 → 2.2 s), so it stays
-    # unpinned. Results are partitioning-independent either way
-    # (per-row argmax, integer sums) — a pure physical choice.
+    # path (k≤64, demo/oracle scale) measured the OPPOSITE: pinning
+    # it cost ~0.6 s against nothing saved (ann_ivf_kmeans_topk
+    # isolated warm 1.6 → 2.2 s, a pin measured together with the
+    # partition-count probe it then had), so it stays unpinned.
+    # Results are partitioning-independent either way (per-row
+    # argmax, integer sums) — a pure physical choice.
     if assign == "join":
-        v = _pin_wide(v, "vec_id")
+        v = pin_parallelism(v, "vec_id")
     # init = the K smallest vec_ids (== vec_id 0..K-1 on the catalog
     # tables, which is what the SQL oracle hard-codes; robust to
     # non-contiguous ids on arbitrary input)
@@ -245,7 +233,7 @@ def kmeans_fit(
         # in that plan either way — a persist here would cache the
         # full n-row assignment per Lloyd round while saving nothing
         # (r11 ADVICE; the r11 SemDeDup fix's load-bearing parts were
-        # the struct-only argmax and _pin_wide, not this cache)
+        # the struct-only argmax and the width pin, not this cache)
         assigned = assigner(v, cents)
         stats = (
             assigned.select("cell", F.posexplode("qe"))

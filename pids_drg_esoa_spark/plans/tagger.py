@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 import pandas as pd
 from pyspark.sql import types as T
 
-from ..session import run_concurrently
+from ..session import pin_parallelism, run_concurrently
 from ..functions.exprcache import cached_checkpoint, cached_value
 from ..functions.fuzzy import fuzz_ratio, length_band_filter
 from ..functions.routes_forms import parse_form_col
@@ -344,35 +344,13 @@ PRIORITY_SYNONYM_MIXTURE_FALLBACK = 98
 PRIORITY_MIXTURE_FALLBACK = 99
 
 
-def _pin_parallelism(df: DataFrame, *cols: str) -> DataFrame:
-    """Hash-repartition to 2× the cluster parallelism so the
-    PYTHON-heavy stage that follows runs wide. AQE's partition
-    coalescing is byte-based and collapses small-byte/high-CPU
-    relations (deduped texts, distinct lookup keys) to one partition,
-    serializing every pandas-UDF stage built on them — it cannot see
-    Python CPU, only shuffle bytes. Measured caveat: Spark treats
-    repartition(numPartitions, col) as AQE-coalescible when
-    numPartitions EQUALS spark.sql.shuffle.partitions, so dodge an
-    accidental collision with the session setting (2× parallelism is
-    also the better width for Python-stage stragglers). Hashing on
-    the given cols keeps row placement deterministic."""
-    spark_ = df.sparkSession
-    n_part = 2 * spark_.sparkContext.defaultParallelism
-    try:
-        if n_part == int(spark_.conf.get("spark.sql.shuffle.partitions")):
-            n_part += 1
-    except (TypeError, ValueError):
-        pass
-    return df.repartition(n_part, *[F.col(c) for c in cols])
-
-
 def _components(esoa: DataFrame, text_col: str, brand_b, mw_b, syn_b) -> DataFrame:
     """Stages 1-2: dedupe texts, extract combination components."""
     doc_enrich = cached_value(
         "tagger_doc_enrich", _broadcast_key(brand_b, mw_b, syn_b),
         lambda: _make_doc_enrich(brand_b, mw_b, syn_b),
     )
-    # Explicit repartition after the dedupe shuffle (_pin_parallelism):
+    # Explicit repartition after the dedupe shuffle (pin_parallelism):
     # AQE's coalescing is BYTE-based (parallelismFirst still coalesces
     # below minPartitionSize), and 155K distinct short texts compress
     # under 1 MB — so without this, AQE collapses the stage to ONE
@@ -388,7 +366,7 @@ def _components(esoa: DataFrame, text_col: str, brand_b, mw_b, syn_b) -> DataFra
     # literals, and each of the former 15 withColumns re-analyzed the
     # whole tree — pure driver time. Column names and order reproduce
     # the former chain exactly.
-    base = _pin_parallelism(
+    base = pin_parallelism(
         esoa.select(F.col(text_col).alias("raw_text"))
         .filter(F.col("raw_text").isNotNull() & (F.trim("raw_text") != ""))
         .distinct(),
@@ -628,10 +606,10 @@ def _token_matches(
     # CPU-s) at 155K texts against ~0.3M per distinct key. Two origin
     # flags carry the per-pair rules over to the key: the brand
     # short-circuit and the multiword tier apply to token-origin pairs
-    # only. _pin_parallelism first, then aggregate: one exchange, and
+    # only. pin_parallelism first, then aggregate: one exchange, and
     # the probe is small-bytes/high-CPU, exactly what AQE would
     # collapse to one partition.
-    probe = _pin_parallelism(keys, "key").groupBy("key").agg(
+    probe = pin_parallelism(keys, "key").groupBy("key").agg(
         F.max(~F.col("is_combo")).alias("has_tok"),
         F.max("is_combo").alias("has_combo"),
     )

@@ -16,7 +16,8 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 
@@ -91,6 +92,33 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def pin_parallelism(df: DataFrame, *cols: str) -> DataFrame:
+    """Hash-repartition ``df`` on ``cols`` to 2× the cluster
+    parallelism, plus one when that equals
+    ``spark.sql.shuffle.partitions``, so the CPU-heavy Python or
+    per-row stage built on it runs wide. The engine's one width rule
+    for small-bytes, high-CPU relations (deduped texts, distinct
+    lookup keys, documents to shingle, k-means vectors): AQE coalesces
+    partitions by shuffle bytes and cannot see Python CPU, so without
+    an explicit count such a relation lands on one core.
+
+    Why the plus one (probed on PySpark 4.1.2, ``local[4]``,
+    ``shuffle.partitions=8``: 700 distinct strings, ``.distinct()``,
+    the pin, then an aggregate): ``repartition(n, col)`` ran on 4, 1, 9
+    and 16 partitions for n = 4, 8, 9 and 16. At n ==
+    shuffle.partitions Spark drops the repartition as already satisfied
+    by the distinct's own exchange, and AQE then coalesces that
+    exchange. With ``shuffle.partitions=16``, a pin to max(2×
+    parallelism, shuffle.partitions) = 16 after a ``.distinct()`` on
+    its own key ran on 1 partition, where this rule's 8 held. Hashing
+    on ``cols`` keeps row placement deterministic."""
+    spark = df.sparkSession
+    n = 2 * spark.sparkContext.defaultParallelism
+    if n == int(spark.conf.get("spark.sql.shuffle.partitions")):
+        n += 1
+    return df.repartition(n, *[F.col(c) for c in cols])
 
 
 def inherit_local_properties(spark: SparkSession, fn: Callable) -> Callable:

@@ -125,10 +125,7 @@ def main() -> None:
     def assign_opt():
         mem, reps = distinct_text_reps(planted, "text", "doc_id")
         mem = mem.persist()
-        v, _, caches = _verified_pairs_core(
-            reps.persist(), "text", "doc", n_docs,
-            n_parts=spark.sparkContext.defaultParallelism,
-        )
+        v, _, caches = _verified_pairs_core(reps.persist(), "text", "doc", n_docs)
         caches.append(reps)
         comp = connected_components(v.select("doc_a", "doc_b"))
         lab = mem.join(comp, mem.rep == comp.doc, "left").select(
@@ -173,10 +170,7 @@ def main() -> None:
     def assign_opt_big():
         mem, reps = distinct_text_reps(big, "text", "doc_id")
         mem = mem.persist()
-        v, _, caches = _verified_pairs_core(
-            reps.persist(), "text", "doc", n_big,
-            n_parts=spark.sparkContext.defaultParallelism,
-        )
+        v, _, caches = _verified_pairs_core(reps.persist(), "text", "doc", n_big)
         caches.append(reps)
         comp = connected_components(v.select("doc_a", "doc_b"))
         lab = mem.join(comp, mem.rep == comp.doc, "left").select(

@@ -64,6 +64,49 @@ def test_minhash_candidate_join_is_equi(spark):
     assert "CartesianProduct" not in plan, "LSH degraded to cross product"
 
 
+def _final_plan(plan: str) -> str:
+    """``plan`` without AQE's ``== Initial Plan ==`` blocks, which
+    repeat each adaptive plan, nested cached plans included, as it was
+    before execution."""
+    keep, skip_at = [], None
+    for line in plan.splitlines():
+        indent = len(line) - len(line.lstrip(" :|+-"))
+        if skip_at is not None and indent >= skip_at:
+            continue
+        skip_at = None
+        if line.strip(" :|+-").startswith("== Initial Plan =="):
+            skip_at = indent
+            continue
+        keep.append(line)
+    return "\n".join(keep)
+
+
+def test_minhash_rep_side_pins_once(spark):
+    """The collapsed MinHash path shuffles its rep relation to cluster
+    width exactly once, inside word_shingles: a second pin before the
+    shingling would move every rep text twice."""
+    from pids_drg_esoa_spark.operators.dedup import minhash_verified_pairs
+
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "the quick brown fox jumps over the lazy cat",
+        "the quick brown fox jumps over the lazy dog",
+        "a completely different sentence with many words",
+        "a completely different sentence with many words here",
+        "too short",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    verified, caches = minhash_verified_pairs(docs, n_docs=len(texts))
+    try:
+        assert len(verified.collect()) == 4
+        sh = next(c for c in caches if c.columns == ["doc", "sh"])
+        plan = _final_plan(sh._jdf.queryExecution().executedPlan().toString())
+    finally:
+        for c in caches:
+            c.unpersist()
+    assert plan.count("REPARTITION_BY_NUM") == 1, plan
+
+
 def test_kmeans_assignment_is_narrow(spark):
     """IVF training: the assignment is a literal-centroid projection
     (no join), so the only joins in the final plan are the cell-probe

@@ -130,6 +130,25 @@ def test_cli_end_to_end(spark, tmp_path, flow_inputs):
     assert row.match_source == "labs_master"
 
 
+def test_cli_rejects_unknown_item_ref_code_before_spark(tmp_path, monkeypatch, capsys):
+    """An unknown --item-ref-code is an argparse error (exit 2) that
+    lists the known codes; no Spark session is started for it."""
+    from pids_drg_esoa_spark import cli
+
+    def no_spark(*a, **k):
+        raise AssertionError("Spark started for an unknown item-ref-code")
+
+    monkeypatch.setattr(cli, "get_spark", no_spark)
+    with pytest.raises(SystemExit) as exc:
+        cli.main([
+            "--item-ref-code", "NoSuchCode",
+            "--inputs-dir", str(tmp_path), "--output-dir", str(tmp_path),
+        ])
+    assert exc.value.code == 2
+    err = capsys.readouterr().err
+    assert "DrugsAndMedicine" in err and "LaboratoryAndDiagnostic" in err
+
+
 def test_reference_shaped_synonyms_input(spark, flow_inputs):
     """The runner accepts the reference's unified_synonyms shape
     (pipe-joined synonyms column, build_unified_reference.py:296-306)
